@@ -1490,26 +1490,24 @@ object Similarity extends QueryModule {
   private def ivfPqIndexReady(path: String): Boolean =
     IndexParts.forall(p => new java.io.File(s"$path/$p/_SUCCESS").exists())
 
-  /** Train both quantizers over the corpus and write the four index
-    * relations under [[ivfPqIndexPath]]. Always retrains (the build
-    * query MEASURES training; staleness is handled by the path tag).
-    * The two quantizer chains are independent (coarse: cent→assign;
-    * PQ: cbk→codes), so their writes run as two CONCURRENT driver
-    * threads (guide §2.6 — actions are only sequential because the
-    * driver calls them sequentially): the tail of one chain's job
-    * back-fills cores the other frees. Measured at sf0.1: the four
-    * serial writes left the 4-job tail fully sequential. */
+  /** Train both quantizers over the corpus and write the three index
+    * relations (`cent`, `cbk`, `postings`) under [[ivfPqIndexPath]].
+    * Always retrains (the build query MEASURES training; staleness is
+    * handled by the path tag). The writes are independent, so they run
+    * as three CONCURRENT driver threads (guide §2.6 — actions are only
+    * sequential because the driver calls them sequentially): the tail of
+    * one write's job back-fills cores the others free. */
   private def writeIvfPqIndex(s: SparkSession, dir: String): String = {
     val e = vecs(s, dir)
     val idx = ivfPqIndex(e)
     val p = ivfPqIndexPath(dir, idx.cells, idx.ks)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    // All four writes are independent jobs once training finished (cent
-    // and cbk are driver-local broadcast relations; assign and codes are
-    // separate corpus scans), so they overlap as FOUR concurrent actions
-    // (r22; guide §2.6) — the two tiny metadata writes no longer sit
-    // serially ahead of the corpus-sized assign/codes scans.
+    // The three writes are independent jobs once training finished (cent
+    // and cbk are driver-local broadcast relations; postings is the one
+    // corpus scan), so they overlap as THREE concurrent actions (r22;
+    // guide §2.6) — the two tiny metadata writes do not sit serially
+    // ahead of the corpus-sized postings scan.
     val writes = Seq(
       Future { idx.cent.write.mode("overwrite").parquet(s"$p/cent") },
       Future { idx.cbk.write.mode("overwrite").parquet(s"$p/cbk") },

@@ -87,9 +87,13 @@ object TaxiJobs {
   }
 
   /** Task4: 10-minute per-HQ windows; per batch, the intra-batch trend
-    * join fires for windows whose count ≥ 10 and ≥ 2× the window 600 s
+    * rule fires for windows whose count ≥ 10 and ≥ 2× the window 600 s
     * earlier → one `part-{timestamp*100}` file per fired window end
-    * (`Task4.py:120-162`), body = `(hq, (count, timestamp, prev))` lines. */
+    * (`Task4.py:120-162`), body = `(hq, (count, timestamp, prev))` lines.
+    * The sink collects the update batch once and applies the rule to those
+    * rows on the driver ([[TaxiPipelines.trendingRows]]), so a trigger runs
+    * one Spark job; [[TaxiPipelines.trending]] is the DataFrame form it is
+    * checked against. */
   def task4(spark: SparkSession, input: String, output: String,
             checkpoint: Option[String] = None,
             maxFilesPerTrigger: Int = 60): StreamingQuery = {
@@ -98,10 +102,11 @@ object TaxiJobs {
     var w = counts.writeStream
       .outputMode("update")
       .foreachBatch { (df: DataFrame, _: Long) =>
-        val fired = TaxiPipelines.trending(df)
-          .select("headquarters", "count", "timestamp", "prev_count").collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-        fired.groupBy(_._3).foreach { case (ts, rows) =>
+        // The whole batch is collected: Spark fails the trigger's state
+        // commit if a partition is left unconsumed.
+        val updates = df.select("headquarters", "count", "timestamp").collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getInt(2)))
+        TaxiPipelines.trendingRows(updates.toSeq).groupBy(_._3).foreach { case (ts, rows) =>
           val body = rows.sortBy(_._1)
             .map { case (hq, n, t, p) => s"($hq, ($n, $t, $p))" }
             .mkString("\n")
@@ -128,6 +133,12 @@ object TaxiJobs {
       .config("spark.sql.shuffle.partitions",
               sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
+      // The file source lists each trigger's files as separate paths. At
+      // the apps' 60 files a trigger that crosses the default threshold of
+      // 32, so every trigger ran a 60-task Spark job to list files the
+      // source had already found. List them on the driver instead.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+              Int.MaxValue.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     if (StateStores.rocksDbRequested) StateStores.useRocksDb(spark)

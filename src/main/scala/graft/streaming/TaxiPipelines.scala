@@ -95,6 +95,19 @@ object TaxiPipelines {
               col("count_1").as("prev_count"))
   }
 
+  /** [[trending]]'s rule over update rows already on the driver:
+    * `(headquarters, count, timestamp)` in, one `(headquarters, count,
+    * timestamp, prev_count)` out for every pair the inner self-join
+    * returns. [[TaxiJobs.task4]]'s sink applies it to the batch it
+    * collects; the DataFrame form is the independent check. */
+  def trendingRows(batch: Seq[(String, Long, Int)]): Seq[(String, Long, Int, Long)] = {
+    val byWindow = batch.groupBy { case (hq, _, ts) => (hq, ts) }
+    for {
+      (hq, n, ts) <- batch if hq != null && hq != "none" && n >= 10
+      (_, p, _) <- byWindow.getOrElse((hq, ts - 600), Nil) if n - p >= p
+    } yield (hq, n, ts, p)
+  }
+
   /** Word count transform (`Client.py:22-24` as Structured Streaming):
     * explode space-split tokens, grouped count. Applied per micro-batch in
     * foreachBatch to reproduce DStream `reduceByKey`'s batch-local

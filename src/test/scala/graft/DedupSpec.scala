@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Cross-validation of the approximate dedup operators against the exact
   * n-gram Jaccard computation (which is itself DuckDB-oracle-checked). */
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with TestSpark.TempDirs {
   lazy val spark = TestSpark.spark
   private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -55,7 +55,7 @@ class DedupSpec extends AnyFunSuite {
     // shared by all 200 (df=200) + 2 unique. plen=3, so ONE hot shingle
     // lands in every prefix → ~C(200,2) candidate pairs that all FAIL
     // verify (J = 8/12 < 0.8). The df cutoff removes exactly that noise.
-    val tmp = java.nio.file.Files.createTempDirectory("hotdf").toString
+    val tmp = tempDir("hotdf").toString
     val hot = (0 until 200).map { i =>
       (100000L + i, s"uq${i}a zq1 zq2 zq3 zq4 zq5 zq6 zq7 zq8 zq9 zq10 uq${i}b")
     }.toDF("doc_id", "text")
@@ -153,7 +153,7 @@ class DedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     // a corpus containing a zero vector: cosine against it is undefined
     // (0/0); pre-guard this crashed BigDecimal.valueOf(NaN) in the kernel
-    val dir = java.nio.file.Files.createTempDirectory("embcos_zero").toString
+    val dir = tempDir("embcos_zero").toString
     import spark.implicits._
     Seq(
       (0L, Array(0f, 0f, 0f)),              // zero norm — must pair with nobody

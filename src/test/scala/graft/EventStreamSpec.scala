@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * custom keyed-state operator, driven by a real multi-batch file stream
   * (events split into 4 time-ranged parquet files, 1 file per trigger,
   * arbitrary pickup order). */
-class EventStreamSpec extends AnyFunSuite {
+class EventStreamSpec extends AnyFunSuite with TestSpark.TempDirs {
   lazy val spark = TestSpark.spark
 
   /** events staged as 4 range-partitioned parquet files, with modification
@@ -18,7 +18,7 @@ class EventStreamSpec extends AnyFunSuite {
     * an out-of-order feed would (correctly) drop whole late files once the
     * watermark passes them, making the expected set order-dependent. */
   private lazy val stagedDir: String = {
-    val dir = Files.createTempDirectory("evstream").toString
+    val dir = tempDir("evstream").toString
     Tables.eventsLtz(spark, TestSpark.sf)
       .repartitionByRange(4, col("ts"))
       .write.mode("overwrite").parquet(dir)

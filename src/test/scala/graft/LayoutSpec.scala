@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,11 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * partitioned writes must prune at the scan, bucketed tables must elide
   * the join shuffle entirely. These are the two levers that change a
   * 100 TB job's shuffle bill without touching the query. */
-class LayoutSpec extends AnyFunSuite {
+class LayoutSpec extends AnyFunSuite with TestSpark.TempDirs {
   lazy val spark = TestSpark.spark
 
   test("partitionBy write → partition pruning at the scan") {
-    val dir = Files.createTempDirectory("layout_part").toString
+    val dir = tempDir("layout_part").toString
     Tables.events(spark, TestSpark.sf)
       .withColumn("day", to_date(col("ts")))
       .write.partitionBy("event_type").mode("overwrite").parquet(dir)

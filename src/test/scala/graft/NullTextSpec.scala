@@ -17,12 +17,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * NULL-text (the degenerate case where `avail_tokens` would aggregate
   * to NULL in pipe_mix_epochs).
   */
-class NullTextSpec extends AnyFunSuite {
+class NullTextSpec extends AnyFunSuite with TestSpark.TempDirs {
   lazy val spark = TestSpark.spark
 
   /** sf0.001 documents + NULL-text rows, written under a temp sf dir. */
   private lazy val hostileDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-nulltext").toString
+    val dir = tempDir("graft-nulltext").toString
     val base = Tables.documents(spark, TestSpark.sf)
     val extra = spark.createDataFrame(
       java.util.Arrays.asList(

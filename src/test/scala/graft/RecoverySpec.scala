@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (SURVEY §2.2 K4 — its shipped `checkpoint/` proves 4 committed
   * batches); here it covers custom session state, not just built-in agg
   * state (TaxiStreamSpec covers that path). */
-class RecoverySpec extends AnyFunSuite {
+class RecoverySpec extends AnyFunSuite with TestSpark.TempDirs {
   lazy val spark = TestSpark.spark
 
   /** events sorted into 4 time-ranged parquet slices, written as separate
@@ -27,7 +27,7 @@ class RecoverySpec extends AnyFunSuite {
       .withColumn("sl", ntile(4).over(
         org.apache.spark.sql.expressions.Window.orderBy(col("ts"))))
       .where(col("sl") === slice + 1).drop("sl")
-    val tmp = Files.createTempDirectory(s"slice$slice").toString
+    val tmp = tempDir(s"slice$slice").toString
     staged.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles()
       .find(_.getName.startsWith("part-")).get
@@ -69,7 +69,7 @@ class RecoverySpec extends AnyFunSuite {
       .withColumn("sl", ntile(4).over(
         org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))))
       .where(col("sl") === slice + 1).drop("sl")
-    val tmp = Files.createTempDirectory(s"docslice$slice").toString
+    val tmp = tempDir(s"docslice$slice").toString
     staged.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles()
       .find(_.getName.startsWith("part-")).get
@@ -80,10 +80,10 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("dedup stream job restarts from checkpoint; pairs == batch, exactly once") {
-    val in = Files.createTempDirectory("ddj_in").toString
-    val out = Files.createTempDirectory("ddj_out").toString
-    val cp = Files.createTempDirectory("ddj_cp").toString
-    val corpusDir = Files.createTempDirectory("ddj_corpus").toString
+    val in = tempDir("ddj_in").toString
+    val out = tempDir("ddj_out").toString
+    val cp = tempDir("ddj_cp").toString
+    val corpusDir = tempDir("ddj_corpus").toString
     Tables.documents(spark, TestSpark.sf).select("doc_id", "text")
       .where(col("doc_id") % 2 === 0)
       .write.mode("overwrite").parquet(corpusDir)
@@ -123,7 +123,7 @@ class RecoverySpec extends AnyFunSuite {
       .withColumn("sl", ntile(4).over(
         org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))))
       .where(col("sl") === slice + 1).drop("sl")
-    val tmp = Files.createTempDirectory(s"qvecslice$slice").toString
+    val tmp = tempDir(s"qvecslice$slice").toString
     staged.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles()
       .find(_.getName.startsWith("part-")).get
@@ -134,10 +134,10 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("ANN serve job restarts from checkpoint; answers == one-shot, exactly once") {
-    val in = Files.createTempDirectory("ann_in").toString
-    val out = Files.createTempDirectory("ann_out").toString
-    val cp = Files.createTempDirectory("ann_cp").toString
-    val corpusDir = Files.createTempDirectory("ann_corpus").toString
+    val in = tempDir("ann_in").toString
+    val out = tempDir("ann_out").toString
+    val cp = tempDir("ann_cp").toString
+    val corpusDir = tempDir("ann_corpus").toString
     Tables.embeddings(spark, TestSpark.sf).select("vec_id", "embedding")
       .write.mode("overwrite").parquet(corpusDir)
 
@@ -179,7 +179,7 @@ class RecoverySpec extends AnyFunSuite {
     // restart under a different --kernel would mix two kernels' answers
     // in one output dir. The marker written on first start must reject it.
     import graft.streaming.{AnnServeJob, AnnServeStream}
-    val cp = Files.createTempDirectory("ann_kernel_cp").toString
+    val cp = tempDir("ann_kernel_cp").toString
     AnnServeJob.pinKernel(spark, cp, AnnServeStream.AllFlips)
     // same kernel resumes fine (idempotent)
     AnnServeJob.pinKernel(spark, cp, AnnServeStream.AllFlips)
@@ -188,7 +188,7 @@ class RecoverySpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("allflips") && ex.getMessage.contains("ranked:3"))
     // distinct ranked budgets are distinct kernels too
-    val cp2 = Files.createTempDirectory("ann_kernel_cp2").toString
+    val cp2 = tempDir("ann_kernel_cp2").toString
     AnnServeJob.pinKernel(spark, cp2, AnnServeStream.Ranked(2))
     intercept[IllegalStateException] {
       AnnServeJob.pinKernel(spark, cp2, AnnServeStream.Ranked(3))
@@ -197,7 +197,7 @@ class RecoverySpec extends AnyFunSuite {
 
   test("LSH serve index persists at rest; a regenerated corpus invalidates it") {
     import graft.streaming.AnnServeStream
-    val corpusDir = Files.createTempDirectory("lshidx_corpus").toString
+    val corpusDir = tempDir("lshidx_corpus").toString
     val emb = Tables.embeddings(spark, TestSpark.sf)
       .select(col("vec_id"), col("embedding"))
     val queries = emb.where(col("vec_id") % 50 === 0)
@@ -243,7 +243,7 @@ class RecoverySpec extends AnyFunSuite {
 
   test("index key survives an mtime/count/bytes collision; sweep is age-gated (ADVICE r13)") {
     import graft.streaming.AnnServeStream
-    val corpusDir = Files.createTempDirectory("lshidx_key").toString
+    val corpusDir = tempDir("lshidx_key").toString
     val emb = Tables.embeddings(spark, TestSpark.sf)
       .select(col("vec_id"), col("embedding")).where(col("vec_id") < 200)
 
@@ -291,10 +291,10 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("PQ serve job restarts from checkpoint; answers == one-shot, exactly once") {
-    val in = Files.createTempDirectory("pq_in").toString
-    val out = Files.createTempDirectory("pq_out").toString
-    val cp = Files.createTempDirectory("pq_cp").toString
-    val corpusDir = Files.createTempDirectory("pq_corpus").toString
+    val in = tempDir("pq_in").toString
+    val out = tempDir("pq_out").toString
+    val cp = tempDir("pq_cp").toString
+    val corpusDir = tempDir("pq_corpus").toString
     Tables.embeddings(spark, TestSpark.sf).select("vec_id", "embedding")
       .write.mode("overwrite").parquet(corpusDir)
 
@@ -331,9 +331,9 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("sessionizer restarts from checkpoint; file-sink output == batch, exactly once") {
-    val in = Files.createTempDirectory("rec_in").toString
-    val out = Files.createTempDirectory("rec_out").toString
-    val cp = Files.createTempDirectory("rec_cp").toString
+    val in = tempDir("rec_in").toString
+    val out = tempDir("rec_out").toString
+    val cp = tempDir("rec_cp").toString
 
     // run 1 sees only the first two time slices, then stops
     stage(in, 0); stage(in, 1)
@@ -364,9 +364,9 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("sessionizer recovers on RocksDB state store; output == batch, exactly once") {
-    val in = Files.createTempDirectory("rdb_in").toString
-    val out = Files.createTempDirectory("rdb_out").toString
-    val cp = Files.createTempDirectory("rdb_cp").toString
+    val in = tempDir("rdb_in").toString
+    val out = tempDir("rdb_out").toString
+    val cp = tempDir("rdb_cp").toString
 
     // provider is read at query START and then pinned by the checkpoint;
     // the undo closure keeps it from leaking into the shared session

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * The synthetic embeddings have weak neighbors (top-1 cosine ≈ 0.37
   * median, no planted clusters), which bounds achievable LSH recall —
   * floors below are calibrated to that, not to real-corpus behavior. */
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends AnyFunSuite with TestSpark.TempDirs {
   lazy val spark = TestSpark.spark
 
   private def topk(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
@@ -267,7 +267,7 @@ class SimilaritySpec extends AnyFunSuite {
     // parametric (cells, nprobe) path end-to-end — the oracle gate only
     // runs at base-rung SFs, so the ladder plumbing gets its own pin
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_rung").toString
+    val dir = tempDir("ivfpq_rung").toString
     val emb = Tables.embeddings(spark, TestSpark.sf).select(col("vec_id"), col("embedding"))
     // 5 rotated replicas of sf0.01 (500 rows) = 2,500 < 8,192: stay cheap
     // but prove the parametric path with a NON-default cells value by

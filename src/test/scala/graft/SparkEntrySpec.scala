@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all specs (one JVM-wide session; suites reuse it). */
@@ -14,6 +17,21 @@ object TestSpark {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Mixed into a suite: [[tempDir]] makes each directory under one root
+    * per suite, and `afterAll` deletes the root with all it holds. */
+  trait TempDirs extends BeforeAndAfterAll { this: Suite =>
+    private var root: Path = _
+
+    protected def tempDir(prefix: String): Path = synchronized {
+      if (root == null) root = Files.createTempDirectory(s"graft-$suiteName-")
+      Files.createTempDirectory(root, prefix)
+    }
+
+    override def afterAll(): Unit =
+      try if (root != null) FileUtils.deleteQuietly(root.toFile)
+      finally super.afterAll()
+  }
 }
 
 class SparkEntrySpec extends AnyFunSuite {

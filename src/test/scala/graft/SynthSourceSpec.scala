@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SynthSourceSpec extends AnyFunSuite {
+class SynthSourceSpec extends AnyFunSuite with TestSpark.TempDirs {
   lazy val spark = TestSpark.spark
   private val fmt = "graft.sources.SynthProvider"
 
@@ -78,7 +78,7 @@ class SynthSourceSpec extends AnyFunSuite {
       .writeStream.format("graft.sources.CollectorSinkProvider")
       .option("name", "stream1")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("collector_cp").toString)
+        tempDir("collector_cp").toString)
       .start()
     try { q.processAllAvailable() } finally q.stop()
     val (rows, sum) = CollectorSink.results("stream1")

@@ -2,13 +2,16 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
+import java.util.concurrent.ConcurrentLinkedQueue
 import graft.streaming.{TaxiJobs, TaxiPipelines}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
-import scala.util.Using
+import org.scalatest.time.SpanSugar._
+import scala.jdk.CollectionConverters._
 
 /** End-to-end tests for the taxi pipelines against independently computed
   * ground truth (NOT the reference's golden files, which mix stale code
@@ -20,7 +23,7 @@ import scala.util.Using
   * and the golden-byte parity with the reference's output; they run only
   * where `/root/reference` exists, and are canceled elsewhere.
   */
-class TaxiStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TaxiStreamSpec extends AnyFunSuite with TestSpark.TempDirs {
   lazy val spark = TestSpark.spark
   private val taxiData = "/root/reference/taxi-data"
   private val refOutput = "/root/reference/output"
@@ -36,10 +39,7 @@ class TaxiStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** (dropoff hour → (goldman, citigroup)) spot truths. */
   private val hqTruth = Map(7 -> (17L, 62L), 9 -> (39L, 60L), 10 -> (26L, 18L))
 
-  /** Every directory the suite writes lives under `root`, removed in
-    * `afterAll`. */
-  private var root: Path = _
-  private lazy val feed = TaxiFeed.write(tmp("feed"))
+  private lazy val feed = TaxiFeed.write(tempDir("feed"))
   private lazy val feedData = feed.dir.toString
 
   /** Generated-feed spot hours; 8 holds the planted trend. */
@@ -48,21 +48,6 @@ class TaxiStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     h -> (feed.hqTruth.getOrElse((h, "goldman"), 0L),
           feed.hqTruth.getOrElse((h, "citigroup"), 0L))
   }.toMap
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    root = Files.createTempDirectory("taxi-stream-spec")
-  }
-
-  override def afterAll(): Unit =
-    try {
-      if (root != null)
-        Using.resource(Files.walk(root)) {
-          _.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
-        }
-    } finally super.afterAll()
-
-  private def tmp(prefix: String): Path = Files.createTempDirectory(root, prefix)
 
   private def stage(src: String, dst: Path, hours: Range): Unit =
     hours.foreach { h =>
@@ -100,7 +85,7 @@ class TaxiStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Runs Task2 over `input`; the bodies of hours 0, 8, 14, 22 and 23 must
     * be the bare count, byte for byte (no trailing newline). */
   private def checkTask2(input: String, truth: Map[Int, Long]): Path = {
-    val out = tmp("t2out")
+    val out = tempDir("t2out")
     drain(TaxiJobs.task2(spark, input, out.toString))
     Seq(0, 8, 14, 22, 23).foreach { h =>
       val body = new String(Files.readAllBytes(out.resolve(s"output-${stamp(h)}")), UTF_8)
@@ -112,7 +97,7 @@ class TaxiStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Runs Task3 over `input`; each spot hour's file holds both lines, in
     * the `('citigroup', n)\n('goldman', n)` layout. */
   private def checkTask3(input: String, spots: Map[Int, (Long, Long)]): Path = {
-    val out = tmp("t3out")
+    val out = tempDir("t3out")
     drain(TaxiJobs.task3(spark, input, out.toString))
     spots.foreach { case (h, (g, c)) =>
       val body = Files.readString(out.resolve(s"output3-${stamp(h)}"))
@@ -123,11 +108,16 @@ class TaxiStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     out
   }
 
+  /** The DataFrame trend join over `counts`, as `(hq, count, ts, prev)`. */
+  private def trendingBatch(counts: DataFrame): Seq[(String, Long, Int, Long)] =
+    TaxiPipelines.trending(counts).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSeq
+
   /** Runs Task4 over hour 08 of `input` staged as one micro-batch; the
-    * 08:50 citigroup trend must fire, and the fired windows must equal a
-    * batch-mode trend computation over the same files. */
+    * 08:50 citigroup trend must fire, and the lines of every part file
+    * must equal a batch-mode trend computation over the same files. */
   private def checkTask4(input: String): Path = {
-    val in = tmp("t4in"); val out = tmp("t4out")
+    val in = tempDir("t4in"); val out = tempDir("t4out")
     stage(input, in, 8 to 8) // dropoffs 08:00-08:59 → one micro-batch
     drain(TaxiJobs.task4(spark, in.toString, out.toString))
     // [08:50,09:00) citigroup: 12 dropoffs vs 3 in [08:40,08:50) →
@@ -137,11 +127,18 @@ class TaxiStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Files.exists(f), s"missing; files=${out.toFile.list.toSeq}")
     assert(Files.readString(f) == "(citigroup, (12, 32400, 3))")
     // streaming batch output == batch-mode trend computation on same files
-    val expected = TaxiPipelines.trending(TaxiPipelines.tenMinHqCounts(
-        TaxiPipelines.scanSplit24(spark, in.toString, streaming = false)))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSet
-    val gotFiles = out.toFile.list.toSeq.filter(_.startsWith("part-"))
-    assert(gotFiles.size == expected.map(_._3).size)
+    val expected = trendingBatch(TaxiPipelines.tenMinHqCounts(
+        TaxiPipelines.scanSplit24(spark, in.toString, streaming = false))).toSet
+    val line = """\((\w+), \((\d+), (\d+), (\d+)\)\)""".r
+    val got = out.toFile.list.toSeq.filter(_.startsWith("part-")).flatMap { name =>
+      Files.readString(out.resolve(name)).split("\n").toSeq.map {
+        case line(hq, n, ts, p) =>
+          assert(name == s"part-${(if (ts == "0") 24L else ts.toLong) * 100L}", name)
+          (hq, n.toLong, ts.toInt, p.toLong)
+        case l => fail(s"$name: malformed line '$l'")
+      }
+    }
+    assert(got.toSet == expected)
     out
   }
 
@@ -149,7 +146,7 @@ class TaxiStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     * is staged: the restart resumes at the next batch and leaves the
     * earlier hours' files as they were. */
   private def checkCheckpoint(input: String, truth: Map[Int, Long]): Unit = {
-    val in = tmp("ckin"); val out = tmp("ckout"); val ck = tmp("ck")
+    val in = tempDir("ckin"); val out = tempDir("ckout"); val ck = tempDir("ck")
     def body(h: Int) = Files.readString(out.resolve(s"output-${stamp(h)}")).trim
     stage(input, in, 0 to 1)
     drain(TaxiJobs.task2(spark, in.toString, out.toString, Some(ck.toString),
@@ -201,6 +198,60 @@ class TaxiStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming task4: chronological hour-08 batch fires the known trend") {
     checkTask4(feedData)
+  }
+
+  test("streaming task4: one Spark job per data trigger at 20 files") {
+    val in = tempDir("t4jin"); val out = tempDir("t4jout")
+    stage(feedData, in, 8 to 8)
+    // (queryId, batchId) of every job a streaming query starts; -1 for a
+    // job outside a batch
+    val jobs = new ConcurrentLinkedQueue[(String, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          Option(p.getProperty("sql.streaming.queryId")).foreach { id =>
+            jobs.add(id -> Option(p.getProperty("streaming.sql.batchId")).fold(-1L)(_.toLong))
+          }
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = TaxiJobs.task4(spark, in.toString, out.toString, maxFilesPerTrigger = 20)
+      drain(q)
+      val dataBatches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId)
+      assert(dataBatches.length == 3)
+      eventually(timeout(10.seconds)) {
+        val perBatch = jobs.asScala.filter(_._1 == q.id.toString)
+          .groupMapReduce(_._2)(_ => 1)(_ + _)
+        assert(perBatch == dataBatches.map(_ -> 1).toMap)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("trend rule: driver-side rows equal the DataFrame join") {
+    import spark.implicits._
+    type Row4 = (String, Long, Int, Long)
+    def multiset(xs: Seq[Row4]) = xs.groupMapReduce(identity)(_ => 1)(_ + _)
+    def check(batch: Seq[(String, Long, Int)]): Seq[Row4] = {
+      val rows = TaxiPipelines.trendingRows(batch)
+      val joined = trendingBatch(batch.toDF("headquarters", "count", "timestamp"))
+      assert(multiset(rows) == multiset(joined), s"batch $batch")
+      rows
+    }
+    val fired = check(Seq(
+      ("goldman", 4L, 600), ("goldman", 9L, 1200),          // count 9: below 10
+      ("citigroup", 5L, 600), ("citigroup", 10L, 1200),     // 10, exactly 2×: fires
+      ("goldman", 6L, 2400), ("goldman", 11L, 3000),        // just under 2×
+      ("goldman", 6L, 3600), ("goldman", 12L, 4200),        // exactly 2×: fires
+      ("none", 2L, 600), ("none", 20L, 1200),               // `none` never fires
+      (null, 2L, 1200), (null, 20L, 1800),                  // null never fires
+      ("citigroup", 2L, 4800), ("goldman", 20L, 5400),      // predecessor under another HQ
+      ("citigroup", 1L, 85800), ("citigroup", 30L, 0)))     // midnight wrap: not adjacent
+    assert(fired.toSet == Set(("citigroup", 10L, 1200, 5L), ("goldman", 12L, 4200, 6L)))
+    assert(check(Seq(("goldman", 50L, 7200))).isEmpty)      // no predecessor window
+    // every matching pair, as the inner join returns them
+    assert(check(Seq(("goldman", 3L, 600), ("goldman", 3L, 600), ("goldman", 10L, 1200)))
+      .length == 2)
   }
 
   test("streaming task2: checkpoint recovery resumes without reprocessing") {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * crashers): each must return IDENTICAL flavor-independent values on
   * an LTZ and an NTZ copy of the same data, so the next flavor flip is
   * a no-op instead of a multi-query outage. */
-class TimestampFlavorSpec extends AnyFunSuite {
+class TimestampFlavorSpec extends AnyFunSuite with TestSpark.TempDirs {
   lazy val spark = TestSpark.spark
 
   /** A full sf0.001 testdata dir staged once per flavor: every table
@@ -27,7 +26,7 @@ class TimestampFlavorSpec extends AnyFunSuite {
     * different physical types — and because ALL tables are present, every
     * registered query can run against either dir. */
   private def stage(flavor: String): String = {
-    val dir = Files.createTempDirectory(s"tsflavor_$flavor").toString
+    val dir = tempDir(s"tsflavor_$flavor").toString
     Tables.names.foreach { t =>
       val df = Tables.load(spark, TestSpark.sf, t)
       val out = if (t == "events") df.withColumn("ts", col("ts").cast(flavor))
