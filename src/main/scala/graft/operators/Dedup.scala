@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryModule, Tables}
+import graft.functions.SortedIntersectSize.sortedIntersectSize
 import graft.functions.VectorDot.vectorDot
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -112,7 +113,9 @@ object Dedup extends QueryModule {
     *      qualifying docs MUST collide inside their prefixes — no false
     *      negatives;
     *   3. candidate pairs (prefix collision + size filter t·|A| ≤ |B| ≤
-    *      |A|/t) are verified with an exact `array_intersect`.
+    *      |A|/t) are verified with an exact sorted-merge intersection
+    *      ([[graft.functions.SortedIntersectSize]]) of the full shingle
+    *      arrays.
     *
     * Scale rationale: a plain inverted-index self-join generates ~m²/2
     * rows for every shingle shared by m docs — on a corpus with a tiny
@@ -127,11 +130,15 @@ object Dedup extends QueryModule {
     * rare-first order: sort_array on (df, sh) structs IS the canonical
     * rarity order (struct ordering = field 1 then field 2), so the prefix
     * is a slice — no row_number window, no extra shuffle+sort of the
-    * exploded relation. Persisted because it feeds 3-4 consumers per
-    * query (index sides + verify joins) and self-join aliasing re-keys
-    * expression ids, so plain exchange reuse never collapses the
-    * duplicates (verified via explain: 8 parquet scans without the
-    * cache). One row per doc — orders of magnitude smaller than input. */
+    * exploded relation. `shingles` MUST stay sorted by `sh` alone
+    * (`sort_array`, never by (df, sh)): the verify kernel
+    * [[graft.functions.SortedIntersectSize]] merges two such arrays, and
+    * two relations may rank the same shingle by different df. Persisted
+    * because it feeds 3-4 consumers per query (index sides + verify
+    * joins) and self-join aliasing re-keys expression ids, so plain
+    * exchange reuse never collapses the duplicates (verified via explain:
+    * 8 parquet scans without the cache). One row per doc — orders of
+    * magnitude smaller than input. */
   private[graft] def rarityDocs(s: SparkSession, dir: String): DataFrame =
     rarityDocsOf(explodedShingles(s, dir, "sh")).persist()
 
@@ -149,7 +156,7 @@ object Dedup extends QueryModule {
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("df"), col("sh")))).as("byRarity"),
            first(col("n_sh")).as("n_sh"))
-      .withColumn("shingles", transform(col("byRarity"), _.getField("sh")))
+      .withColumn("shingles", sort_array(transform(col("byRarity"), _.getField("sh"))))
       .withColumn("plen",
         (col("n_sh") - ceil(col("n_sh") * lit(jaccardThreshold)) + 1).cast("int"))
       .select(col("doc_id"), col("n_sh"), col("shingles"), col("plen"), col("byRarity"))
@@ -208,8 +215,8 @@ object Dedup extends QueryModule {
     * per-file open cost) via repartition, NOT coalesce (r17, the
     * VERDICT r16 #2 diagnosis): coalesce(4) propagates UP through the
     * narrow stages to the previous shuffle boundary, so the verify join
-    * (array_intersect over the full shingle sets — the build's real
-    * work) ran in FOUR tasks on a 32-core host. That, not any
+    * (the intersection of the full shingle sets — the build's real work)
+    * ran in FOUR tasks on a 32-core host. That, not any
     * algorithmic term, was the bulk of the "7×/decade" sf10 growth:
     * DedupPairsProbe measured every posting-list term flat-linear
     * (max m = 8 at 5k/50k/500k docs — the prefix filter already bounds
@@ -273,7 +280,7 @@ object Dedup extends QueryModule {
         col("n_sh").as("na")), "doc_a")
       .join(docs.select(col("doc_id").as("doc_b"), col("shingles").as("sb"),
         col("n_sh").as("nb")), "doc_b")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
+      .withColumn("inter", sortedIntersectSize(col("sa"), col("sb")))
       .withColumn("jaccard",
         round(col("inter") / (col("na") + col("nb") - col("inter")), 6))
       .where(col("jaccard") >= jaccardThreshold)
@@ -326,7 +333,7 @@ object Dedup extends QueryModule {
     cand
       .join(docs.select($"doc_id".as("new_id"), $"shingles".as("sa"), $"n_sh".as("na")), "new_id")
       .join(docs.select($"doc_id".as("corpus_id"), $"shingles".as("sb"), $"n_sh".as("nb")), "corpus_id")
-      .withColumn("inter", size(array_intersect($"sa", $"sb")))
+      .withColumn("inter", sortedIntersectSize($"sa", $"sb"))
       .withColumn("jaccard", round($"inter" / ($"na" + $"nb" - $"inter"), 6))
       .where($"jaccard" >= jaccardThreshold)
       .select($"new_id", $"corpus_id", $"jaccard")
@@ -483,7 +490,7 @@ object Dedup extends QueryModule {
     val docs = e.groupBy($"doc_id")
       .agg(graft.functions.SketchAggregates
              .minhashSketch($"x", hashA, hashB, P).as("sig"),
-           collect_list($"sh").as("shingles"),
+           sort_array(collect_list($"sh")).as("shingles"),
            first($"n_sh").as("n_sh"))
       .persist()
     // LSH banding: band value = hash of its ROWS signature slots
@@ -502,7 +509,7 @@ object Dedup extends QueryModule {
     cand
       .join(docs.select($"doc_id".as("doc_a"), $"shingles".as("sa"), $"n_sh".as("na")), "doc_a")
       .join(docs.select($"doc_id".as("doc_b"), $"shingles".as("sb"), $"n_sh".as("nb")), "doc_b")
-      .withColumn("inter", size(array_intersect($"sa", $"sb")))
+      .withColumn("inter", sortedIntersectSize($"sa", $"sb"))
       .withColumn("jaccard", round($"inter" / ($"na" + $"nb" - $"inter"), 6))
       .where($"jaccard" >= jaccardThreshold)
       .select($"doc_a", $"doc_b", $"jaccard")
@@ -872,62 +879,49 @@ object Dedup extends QueryModule {
     *
     * Emits the FULL C(S,2) matrix: pairs with zero shingle overlap
     * surface as n_common=0 / jaccard=0 rows (ADVICE r9 — consumers must
-    * be able to distinguish "no overlap" from "pair absent"), built by
-    * left-joining the overlap counts onto the source-pair skeleton (a
-    * cross join of the TINY aggregated size relation with itself, S²
-    * rows — never the corpus).
+    * be able to distinguish "no overlap" from "pair absent").
     *
-    * Scale: ONE corpus-sized shuffle. The exploded (source, shingle)
+    * Scale: ONE corpus pass and ONE corpus-sized shuffle. The fanned-out
+    * scan shingles each document in parallel, and the (source, shingle)
     * rows aggregate straight to `sh → sorted set of sources` (map-side
-    * partial collect_set dedups before the exchange, so the shuffle
-    * carries ≤ one row per distinct shingle per map task — strictly
-    * less than the old distinct() + self-join shape, which re-shuffled
-    * the distinct relation twice more to key the join on sh). Pair
-    * expansion is then a per-row array transform with BOUNDED fan-out:
-    * a shingle held by k of the S sources yields C(k,2) ≤ C(S,2) pair
-    * rows (S is tiny — 20 here), and both the pair counts and the
-    * per-source set sizes reduce through partial aggregation to
-    * S²-sized relations. Set sizes ride in as a broadcast; integer
-    * arithmetic until the one Jaccard division. */
+    * partial collect_set dedups before the exchange). Each set expands
+    * into its pairs (a, b) with a ≤ b through two codegen'd posexplodes
+    * and a position filter — a shingle held by k of the S sources yields
+    * k(k+1)/2 rows — and one aggregate counts them: the diagonal (a, a)
+    * is a's set size, the off-diagonal the overlaps. That ≤ S(S+1)/2-row
+    * result (S is tiny — 20 here) folds into one row, a pair → count map
+    * plus the sorted source list, from which the skeleton explodes; so
+    * the corpus subtree has one consumer and nothing is persisted.
+    * Integer arithmetic until the one Jaccard division. */
   def sourceOverlap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // persist()ed because THREE consumers (sizes, overlaps, and the
-    // skeleton's second sizes branch) re-key expression ids, which
-    // defeats ReuseExchange — measured r22: without the cache the plan
-    // triplicates the scan + shingle UDF + corpus agg subtree (no
-    // ReusedExchange node appears). Lifecycle (ADVICE r21, low): like
-    // [[rarityDocs]], the cache is released by the harness's
-    // clearCache-per-query (Bench/Verify/QueryBench); a long-running
-    // session embedding this query should wrap it in its own
-    // release scope the way [[graft.operators.Similarity]] index builds
-    // do. The pinned relation is one row per distinct shingle — corpus-
-    // vocabulary-sized, not corpus-sized.
-    val bySh = Tables.documents(s, dir)
-      .withColumn("shingles", graft.functions.ShingleArray.shingleArray($"text"))
-      .select($"source", explode($"shingles").as("sh"))
-      .groupBy($"sh")
-      .agg(sort_array(collect_set($"source")).as("srcs"))
-      .persist()
-    val sizes = bySh.select(explode($"srcs").as("source"))
-      .groupBy($"source").agg(count(lit(1)).as("n_sh"))
-    val overlaps = bySh
-      .where(size($"srcs") >= 2)
-      .select(explode(flatten(transform($"srcs", (a, i) =>
-        transform(slice($"srcs", i + lit(2), size($"srcs")), b =>
-          struct(a.as("src_a"), b.as("src_b")))))).as("p"))
-      .groupBy($"p.src_a".as("src_a"), $"p.src_b".as("src_b"))
-      .agg(count(lit(1)).as("n_common"))
-    val skeleton = sizes.select($"source".as("src_a"), $"n_sh".as("n_a"))
-      .crossJoin(sizes.select($"source".as("src_b"), $"n_sh".as("n_b")))
-      .where($"src_a" < $"src_b")
-    skeleton
-      .join(broadcast(overlaps), Seq("src_a", "src_b"), "left")
-      .withColumn("n_common", coalesce($"n_common", lit(0L)))
+    val pair = (a: Column, b: Column) => struct(a.as("a"), b.as("b"))
+    val counts = upperPairs(Tables.fanOutScan(Tables.documents(s, dir))
+        .select($"source", explode(graft.functions.ShingleArray.shingleArray($"text")).as("sh"))
+        .groupBy($"sh")
+        .agg(sort_array(collect_set($"source")).as("srcs")), $"i" <= $"j")
+      .groupBy($"src_a", $"src_b")
+      .agg(count(lit(1)).as("n"))
+    val folded = counts.agg(
+      map_from_entries(collect_list(struct(pair($"src_a", $"src_b"), $"n"))).as("m"),
+      sort_array(collect_list(when($"src_a" === $"src_b", $"src_a"))).as("srcs"))
+    upperPairs(folded, $"i" < $"j")
+      .select($"src_a", $"src_b",
+        element_at($"m", pair($"src_a", $"src_a")).as("n_a"),
+        element_at($"m", pair($"src_b", $"src_b")).as("n_b"),
+        coalesce(element_at($"m", pair($"src_a", $"src_b")), lit(0L)).as("n_common"))
       .withColumn("jaccard",
         round($"n_common" / ($"n_a" + $"n_b" - $"n_common"), 6))
-      .select($"src_a", $"src_b", $"n_a", $"n_b", $"n_common", $"jaccard")
       .orderBy($"src_a", $"src_b")
   }
+
+  /** `rel` with its sorted `srcs` array expanded into position-filtered
+    * pairs `(src_a, src_b)`: two posexplodes (codegen'd, unlike
+    * higher-order lambdas) and `keep` over their positions `i`, `j`. */
+  private def upperPairs(rel: DataFrame, keep: Column): DataFrame =
+    rel.select(col("*"), posexplode(col("srcs")).as(Seq("i", "src_a")))
+      .select(col("*"), posexplode(col("srcs")).as(Seq("j", "src_b")))
+      .where(keep)
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_exact"         -> (exact _),

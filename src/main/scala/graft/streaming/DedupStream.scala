@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.SortedIntersectSize.sortedIntersectSize
 import graft.operators.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -61,7 +62,8 @@ object DedupStream {
       .distinct()
 
   /** Batch-side doc relation with CORPUS-df-ordered prefixes:
-    * `(doc_id, n_sh, shingles, prefix)` where `prefix` is the first
+    * `(doc_id, n_sh, shingles, prefix)` where `shingles` is sorted by
+    * `sh` alone, as the verify kernel needs, and `prefix` is the first
     * `n − ceil(t·n) + 1` shingles by (corpus df asc, shingle asc),
     * minus corpus-absent shingles (lossless, see object scaladoc) and
     * minus `maxDf`-hot shingles (deterministic candidate thinning). */
@@ -79,7 +81,7 @@ object DedupStream {
       .withColumn("plen",
         (col("n_sh") - ceil(col("n_sh") * lit(Dedup.jaccardThreshold)) + 1).cast("int"))
       .select(col("doc_id"), col("n_sh"),
-        transform(col("byRarity"), x => x.getField("sh")).as("shingles"),
+        sort_array(transform(col("byRarity"), x => x.getField("sh"))).as("shingles"),
         transform(cut, x => x.getField("sh")).as("prefix"))
   }
 
@@ -114,7 +116,7 @@ object DedupStream {
         col("shingles").as("sa"), col("n_sh").as("na")), "new_id")
       .join(corpusIdx.select(col("doc_id").as("corpus_id"),
         col("shingles").as("sb"), col("n_sh").as("nb")), "corpus_id")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
+      .withColumn("inter", sortedIntersectSize(col("sa"), col("sb")))
       .withColumn("jaccard", round(col("inter") / (col("na") + col("nb") - col("inter")), 6))
       .where(col("jaccard") >= t)
       .select(col("new_id"), col("corpus_id"), col("jaccard"))

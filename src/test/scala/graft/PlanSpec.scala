@@ -146,6 +146,25 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("ScalaUDF") && !p.contains("BatchEvalPython"), p)
   }
 
+  test("every shingle Jaccard verify runs the sorted-merge kernel") {
+    import graft.operators.Dedup
+    val sf = TestSpark.sf
+    Seq("ngramJaccardImpl" -> Dedup.ngramJaccardImpl(spark, sf, maxDf = None),
+        "incremental" -> Dedup.incremental(spark, sf),
+        "minhashLsh" -> Dedup.minhashLsh(spark, sf)).foreach { case (q, df) =>
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("sorted_intersect_size"), s"$q:\n$p")
+      assert(!p.contains("array_intersect"), s"$q:\n$p")
+    }
+  }
+
+  test("source overlap: one pass over the corpus, nothing persisted") {
+    val p = simple("dedup_source_overlap")
+    assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"), p)
+    val bySh = """Exchange hashpartitioning\(sh#""".r.findAllIn(p).size
+    assert(bySh === 1, s"$bySh exchanges keyed on sh:\n$p")
+  }
+
   test("text quality is a single-pass scan (only the presentation sort shuffles)") {
     val p = formatted("text_quality")
     val exchanges = "Exchange".r.findAllIn(p).size

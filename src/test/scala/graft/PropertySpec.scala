@@ -112,6 +112,64 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  // -------------------------------------------------------- sorted intersect
+
+  /** Elements that stress the merge order: shared prefixes ("a b c" vs
+    * "a b cd"), the empty string, and multi-byte UTF-8 — U+1F600 sorts
+    * before U+FFFD as UTF-16 but after it as UTF-8 bytes, so a kernel
+    * comparing in any order but Spark's would miscount. */
+  private val pool = Seq("a b c", "a b cd", "a b", "a", "", "b a c", "é x", "e x",
+    "ä ö ü", "日本 語 x", "\uFFFD z", "\uD83D\uDE00 z", "ａ b", "z z z")
+  private val elemGen = Gen.oneOf(
+    Gen.oneOf(pool),
+    Gen.chooseNum(0, 4).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf("a", "b", " ", "é", "日", "\uD83D\uDE00", "\uFFFD"))
+        .map(_.mkString)))
+  private val setGen = Gen.containerOf[Set, String](elemGen)
+
+  test("SortedIntersectSize == array intersection == Scala Set, codegen'd and interpreted") {
+    import graft.functions.SortedIntersectSize
+    import graft.functions.SortedIntersectSize.sortedIntersectSize
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.unsafe.types.UTF8String
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val pairGen = Gen.frequency(
+      6 -> Gen.zip(setGen, setGen),
+      1 -> setGen.map(a => (a, a)),                                  // identical
+      1 -> setGen.map(a => (a, Set.empty[String])),                   // one side empty
+      1 -> Gen.zip(setGen, setGen).map { case (a, b) => (a, b -- a) }) // disjoint
+    val edge = Seq((Set.empty[String], Set.empty[String]), (Set("a b c"), Set("a b cd")))
+    val pairs = edge ++ Gen.listOfN(500 - edge.size, pairGen)
+      .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(20261019L))
+    val df = pairs.zipWithIndex.map { case ((a, b), i) => (i, a.toSeq, b.toSeq) }
+      .toDF("id", "a", "b")
+      .repartition(2) // keep the projection out of a driver-side local relation
+      .select($"id", sort_array($"a").as("sa"), sort_array($"b").as("sb"),
+        size(array_intersect($"a", $"b")).as("hashed"),
+        sortedIntersectSize(array_sort($"a"), array_sort($"b")).as("via_array_sort"))
+      .withColumn("merged", sortedIntersectSize($"sa", $"sb"))
+    val rows = df.collect()
+    val plan = df.queryExecution.executedPlan.toString // the final, run plan
+    assert(plan.contains("sorted_intersect_size") && plan.contains("*("), plan)
+    assert(rows.length === 500)
+    rows.foreach { r =>
+      val (a, b) = pairs(r.getInt(0))
+      val expected = (a intersect b).size
+      def arr(i: Int) = new GenericArrayData(
+        r.getSeq[String](i).map(x => UTF8String.fromString(x): Any).toArray)
+      val interpreted = SortedIntersectSize(null, null).nullSafeEval(arr(1), arr(2))
+      withClue(s"a=$a b=$b") {
+        assert(r.getAs[Int]("merged") === expected)
+        assert(r.getAs[Int]("hashed") === expected)
+        assert(r.getAs[Int]("via_array_sort") === expected)
+        assert(interpreted === expected)
+      }
+    }
+    assert(rows.exists(_.getAs[Int]("merged") > 1) && rows.exists(_.getAs[Int]("merged") == 0))
+  }
+
   // ------------------------------------------------------------------- trend
 
   /** Direct reference implementation of the Task4 doubling rule over a

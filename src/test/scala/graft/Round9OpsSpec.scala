@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Semantic invariants for the round-9 operators, beyond the value-level
   * DuckDB oracle gate: the oracle proves the two engines agree, these
   * prove the AGREED answer has the properties the operator advertises. */
-class Round9OpsSpec extends AnyFunSuite {
+class Round9OpsSpec extends AnyFunSuite with TestSpark.TempDirs {
   lazy val spark = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
 
@@ -468,8 +468,7 @@ class Round9OpsSpec extends AnyFunSuite {
       .mapValues(_.flatMap(d => shingles(d._2)).toSet).toMap
     val rows = Dedup.sourceOverlap(spark, sf).collect()
     val expectedPairs = (for {
-      a <- bySrc.keys; b <- bySrc.keys
-      if a < b && bySrc(a).intersect(bySrc(b)).nonEmpty
+      a <- bySrc.keys; b <- bySrc.keys if a < b
     } yield (a, b)).toSet
     assert(rows.map(r => (r.getString(0), r.getString(1))).toSet === expectedPairs)
     rows.foreach { r =>
@@ -482,6 +481,25 @@ class Round9OpsSpec extends AnyFunSuite {
         .setScale(6, BigDecimal.RoundingMode.HALF_UP)
       assert(BigDecimal(r.getDouble(5)) === jac)
     }
+  }
+
+  test("source overlap: the full C(S,2) matrix, zero-overlap pairs included") {
+    import graft.operators.Dedup
+    import spark.implicits._
+    // s3 shares no shingle with anyone; s4 holds only docs shorter than 3
+    // tokens (one short shingle each), one of which s2 also holds
+    val dir = tempDir("overlap").toString
+    Seq((1L, "the quick brown fox", "s1"), (2L, "jumps over the lazy dog", "s1"),
+        (3L, "the quick brown cat", "s2"), (4L, "over the lazy dog", "s2"),
+        (5L, "hi there", "s2"), (6L, "zeta eta theta iota", "s3"),
+        (7L, "hi there", "s4"), (8L, "yo", "s4"))
+      .toDF("doc_id", "text", "source").write.parquet(s"$dir/documents.parquet")
+    val got = Dedup.sourceOverlap(spark, dir).collect().map(r =>
+      (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5)))
+    assert(got.toSeq === Seq(
+      ("s1", "s2", 5L, 5L, 3L, 0.428571), ("s1", "s3", 5L, 2L, 0L, 0.0),
+      ("s1", "s4", 5L, 2L, 0L, 0.0), ("s2", "s3", 5L, 2L, 0L, 0.0),
+      ("s2", "s4", 5L, 2L, 1L, 0.166667), ("s3", "s4", 2L, 2L, 0L, 0.0)))
   }
 
   test("blocklist: scrub digest and keep flag recompute per doc") {
