@@ -41,7 +41,7 @@ object Bench {
     // Same field set as the canonical BENCH.json record (ADVICE r11: the
     // per-round record parsed from this line must round-trip with it):
     // full sf path, load_after, wait_sec, failed list + true count, and
-    // the filtered flag (ADVICE r12: a SPARK_GRAFT_BENCH_ONLY run's
+    // the filtered flag (ADVICE r12: a SPARK_GRAFT_ONLY run's
     // partial total must self-identify IN-BAND — the stderr warning is
     // not part of the record the driver parses).
     def failedJson(cap: Int): String =
@@ -71,35 +71,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill files on the fastest local storage — see
-      // [[graft.Sessions.localDir]] (tmpfs here; NVMe on a cluster)
-      .config("spark.local.dir", Sessions.localDir)
-      // ObjectHashAggregate (collect_list/collect_set paths: the dedup
-      // rarity index, PQ LUT maps, …) falls back to SORT-based
-      // aggregation past 128 distinct groups per task — a default so
-      // conservative the fallback fired on EVERY task at sf0.1
-      // (numTasksFallBacked=32; measured r21: dedup_cand_pairs -37%
-      // CPU, dedup_source_overlap -17% with the fallback lifted).
-      // 8192 groups × doc-sized lists is a few MB per task at any
-      // scale; the fallback (graceful, per-task) still guards the
-      // pathological case. Parameterized for cluster tuning.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "8192"))
-      // spark.sql.join.preferSortMergeJoin deliberately stays at its
-      // default: an r21 sequential A/B showed apparent 25-46% wins that
-      // a null test (conf set to its own default) reproduced — pure JIT
-      // order bias. The honest interleaved A/B (tools/Scratch, r21)
-      // measured SMJ vs shuffled-hash within +-10% noise at sf0.1, with
-      // only rel_salted_join's plan changing at all. See
-      // OPTIMIZATION_r21.md "O4 (negative result)".
-      .getOrCreate()
+    val spark = Sessions.create("Bench")
     spark.sparkContext.setLogLevel("WARN")
     // Host load at bench start: a contaminated run (concurrent host load)
     // is then self-identifying in the artifact (see BASELINE.md, round 4
@@ -125,13 +97,13 @@ object Bench {
       println(s"BENCH-WAIT load=$loadBefore > 1.0, sleeping 15s (waited ${waited}s)")
       Thread.sleep(15000L); waited += 15; loadBefore = loadAvg()
     }
-    // Dev-iteration filter, mirroring Verify's SPARK_GRAFT_ONLY: time a
+    // Dev-iteration filter, the same SPARK_GRAFT_ONLY Verify reads: time a
     // comma-listed subset at the bench SF. Guards against leaking into a
     // judged run: loud stderr warning AND BENCH.json is NOT written, so a
     // filtered run can never replace the canonical record.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     only.foreach { f => System.err.println(
-      s"[bench] WARNING: SPARK_GRAFT_BENCH_ONLY is set — timing ONLY " +
+      s"[bench] WARNING: SPARK_GRAFT_ONLY is set — timing ONLY " +
         s"${f.size} queries; BENCH.json will NOT be written.") }
     // Warm-up: parquet footers at the bench SF, then every (selected)
     // query once at the smallest SF. Whole-stage-codegen classes are

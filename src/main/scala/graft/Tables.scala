@@ -30,7 +30,7 @@ object Tables {
     * query, 1.4 s of single-core n-gram fold while 31 cores idled.
     *
     * Applied PER OPERATOR, not per table: the r22 interleaved A/B
-    * (tools/Scratch, fanout conf on/off) measured the fan-out a 30-45 %
+    * (fan-out on/off, OPTIMIZATION_r22.md) measured the fan-out a 30-45 %
     * wall win exactly where downstream work is per-row compute
     * (`text_repetition` 1.57 → 0.87 s, `mm_png_decode` 0.93 → 0.65 s) and
     * a LOSS wherever the query's own shuffles dominate (the extra
@@ -47,17 +47,10 @@ object Tables {
     * for every registered query (each ends in a keyed aggregation and/or a
     * total ORDER BY; fp-order-sensitive sums are scaled-integer by
     * convention), and the full oracle gate re-verified 117/117 at
-    * sf0.001 + sf0.01 with the fan-out active. `graft.scan.fanout=false`
-    * (runtime conf, or env SPARK_GRAFT_FANOUT) disables it for A/B
-    * measurement. */
+    * sf0.001 + sf0.01 with the fan-out active. */
   private[graft] def fanOutScan(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val dflt = sys.env.getOrElse("SPARK_GRAFT_FANOUT", "true")
-    if (df.sparkSession.conf.get("graft.scan.fanout", dflt) == "false") df
-    else {
-      val p = sc.defaultParallelism
-      if (df.rdd.getNumPartitions < p) df.repartition(p) else df
-    }
+    val p = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")

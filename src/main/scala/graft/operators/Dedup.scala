@@ -218,7 +218,8 @@ object Dedup extends QueryModule {
     * (the intersection of the full shingle sets — the build's real work)
     * ran in FOUR tasks on a 32-core host. That, not any
     * algorithmic term, was the bulk of the "7×/decade" sf10 growth:
-    * DedupPairsProbe measured every posting-list term flat-linear
+    * the r17 pairs probe (`SF10_PROBE_r17.json`, BASELINE.md) measured
+    * every posting-list term flat-linear
     * (max m = 8 at 5k/50k/500k docs — the prefix filter already bounds
     * the Σm² term the r16 verdict suspected, so a maxDf cap would have
     * pruned nothing). repartition inserts one tiny exchange of the
@@ -836,10 +837,8 @@ object Dedup extends QueryModule {
     // interleaved A/B in OPTIMIZATION_r22.md). No-op whenever the source
     // already splits to >= the session's parallelism.
     val p = s.sparkContext.defaultParallelism
-    val fanoutOn = s.conf.get("graft.scan.fanout",
-      sys.env.getOrElse("SPARK_GRAFT_FANOUT", "true")) != "false"
     val spread =
-      if (fanoutOn && !docs.isStreaming && docs.rdd.getNumPartitions < p)
+      if (!docs.isStreaming && docs.rdd.getNumPartitions < p)
         docs.repartition(p, $"doc_id")
       else docs
     spread

@@ -490,7 +490,7 @@ object EventOps extends QueryModule {
     // 4th rung (round 14): the sf10 probe measured the (8,53) top rung
     // one decade up (150k users) at 2,817 candidates/user — 4.2× per
     // decade — and 175 s wall even after the broadcast-verify fix. The
-    // CapSweep rung sweep at 150k (ts-shifted replicas, brute ground
+    // r14 rung sweep at 150k (ts-shifted replicas, brute ground
     // truth): 9×64 → 2,581/user, 10×72 → 2,017, 11×80 → 1,429 (79.5 s),
     // all at recall 1.00 with cap 400. 11×80 holds candidates/user
     // growth at ~2.1× per decade (666 → 1,429 from the 15k rung) —
@@ -505,10 +505,9 @@ object EventOps extends QueryModule {
     // pk += 1 (the +1 concatenation per 1/p2 ≈ 2.5× rule above) and
     // pt ×= 1.45 rounded (the measured 24→32→53→80 trajectory's mean
     // step, above the ×1.33 recall floor). These rungs are the RULE's
-    // prediction, to be re-calibrated the way r14's CapSweep calibrated
-    // the 11×80 rung when a corpus actually reaches them; EvRungProbe
-    // (tools/) measures candidate volume at a chosen rung — measured
-    // rows live in BASELINE.md ("E2LSH extension rungs", r19).
+    // prediction, to be re-calibrated the way r14's cap sweep calibrated
+    // the 11×80 rung when a corpus actually reaches them — measured
+    // rows live in BASELINE.md ("E2LSH extension rungs", r19/r20).
     Iterator.iterate((78125L, 11, 80)) { case (thr, pk, pt) =>
       (thr * 5 / 2, pk + 1, math.round(pt * 1.45).toInt)
     }.drop(1).take(3).toSeq
@@ -528,7 +527,8 @@ object EventOps extends QueryModule {
   // QUADRATICALLY in their size — are truncated, and the table count
   // (24-53 at the capped rungs) gives a truncated-away near pair many
   // independent chances to survive elsewhere. Cap=400 is MEASURED
-  // (CapSweep, 15k-user rung (7,32), ts-shifted replica corpus): it
+  // (BASELINE.md "Hot-bucket postings caps", 15k-user rung (7,32),
+  // ts-shifted replica corpus): it
   // leaves the top-20 recall UNCHANGED at 0.85 and the post-distinct
   // candidate set within 0.7% — its entire win is cutting the
   // PRE-distinct pair blowup, which grows with Σ m² per bucket while
@@ -595,19 +595,18 @@ object EventOps extends QueryModule {
                                   pt: Int = ProfTables,
                                   pk: Int = ProfProj,
                                   pw: Double = ProfWidth,
-                                  cap: Option[Long] = None,
-                                  dedup: Boolean = true): DataFrame = {
+                                  cap: Option[Long] = None): DataFrame = {
     val buckets = tsBuckets(vecs, pt, pk, pw, cap, withVec = false)
-    val pairs = buckets.as("ba")
+    buckets.as("ba")
       .join(buckets.as("bb"), Seq("tbl", "qs"), "inner")
       .where(col("ba.user_id") < col("bb.user_id"))
       .select(col("ba.user_id").as("user_a"), col("bb.user_id").as("user_b"))
-    if (dedup) pairs.distinct() else pairs
+      .distinct()
   }
 
   /** Fused candidate-and-verify stream: the exact distance is computed
     * in the bucket self-join's OUTPUT PIPELINE, so only `(user_a,
-    * user_b, dist)` — 24 bytes — ever reaches [[tsTopPairs]]'s heap and
+    * user_b, dist)` — 24 bytes — ever reaches [[tsSimilarity]]'s heap and
     * the candidate pair stream is never materialized to an exchange.
     * This is the r19 slim-top reshape of the r18 scale-killer: the
     * previous plan pushed the 10⁹⁺-row pre-distinct pair stream through
@@ -674,8 +673,8 @@ object EventOps extends QueryModule {
     * LSH equals exact nearest neighbors. The exact contract is covered
     * separately: the unregistered brute-force twin
     * ([[tsSimilarityBrute]]) cross-checks recall in EventOpsSpec at
-    * sf0.01 and in [[graft.tools.SimilarityScaleBench]] at the bench SF
-    * (sf0.1), reported in BASELINE.md.
+    * sf0.01; the bench-SF (sf0.1) recall is recorded in BASELINE.md
+    * "Similarity scaling".
     *
     * Scale: profiles are one groupBy; each user hashes into PT
     * (table, floor(v·p/w)…) bucket keys (per-row map over codegen'd
@@ -688,7 +687,7 @@ object EventOps extends QueryModule {
     * equi-join shape as the dedup family — and amplification is
     * CORPUS-ADAPTIVE: the [[profParams]] ladder raises concatenation
     * with the user count so candidate selectivity FALLS as n grows
-    * (measured in SimilarityScaleBench; at fixed k it was a flat 0.196
+    * (`SIMILARITY_SCALE_r*.json`; at fixed k it was a flat 0.196
     * of all pairs = Θ(n²), VERDICT r10). The user count that picks the
     * rung is one tiny job over the persisted 24-dim profile relation —
     * the same plan-before-you-run runtime adaptivity as AQE, priced at
@@ -701,29 +700,11 @@ object EventOps extends QueryModule {
     * with id tie-breaks — and the ladder is integer thresholds on the
     * exact user count, so both engines deterministically pick the same
     * rung. */
-  def tsSimilarity(s: SparkSession, dir: String): DataFrame =
-    tsTopPairs(s, dir, None)
-
-  /** [[tsSimilarity]] with a cap OVERRIDE for the calibration sweep
-    * ([[graft.tools.CapSweep]]); the registered query always passes
-    * `None` → the shipped [[profCap]] ladder value. */
-  private[graft] def tsTopPairs(s: SparkSession, dir: String,
-                                capOverride: Option[Option[Long]],
-                                rungOverride: Option[(Int, Int)] = None): DataFrame = {
+  def tsSimilarity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val vecs = profileVecs(s, dir).persist() // counted once for the rung pick
     val nUsers = vecs.count()
-    val (pt, pk) = rungOverride.getOrElse(profParams(nUsers))
-    val cap = capOverride.getOrElse(profCap(nUsers))
-    // Probe-only regime override (VERDICT r19 #5): the fat-bucket attach
-    // branch (> [[BroadcastProfileMaxUsers]]) needs its linear-shuffle /
-    // bounded-disk claims measured at a corpus the host can actually
-    // hold, so the probe lowers the bound via env and A/Bs the two
-    // regimes on the SAME corpus+rung — results are identical by
-    // construction (the attach is a plan choice; [[tsScored]] scaladoc),
-    // which the A/B also confirms. Driver/bench runs never set this.
-    val bcastMax = sys.env.get("SPARK_GRAFT_EV_BCAST_MAX").map(_.toLong)
-      .getOrElse(BroadcastProfileMaxUsers)
+    val (pt, pk) = profParams(nUsers)
     // Slim-top shape (r19; replaces the r14 distinct + broadcast/SMJ
     // verify that blew the disk at ~1M users — see [[tsScored]]): the
     // scored stream feeds a TakeOrdered heap of size ProfTopK·pt, the
@@ -747,8 +728,8 @@ object EventOps extends QueryModule {
     // rung — far under topKSortFallbackThreshold), merges once, and the
     // dedup aggregate + final top-20 run over that single tiny set. No
     // exchange ever sees a pair-stream row. PlanSpec pins this.
-    tsScored(vecs, pt, pk, cap = cap,
-        broadcastAttach = nUsers <= bcastMax)
+    tsScored(vecs, pt, pk, cap = profCap(nUsers),
+        broadcastAttach = nUsers <= BroadcastProfileMaxUsers)
       .orderBy($"dist".asc, $"user_a".asc, $"user_b".asc)
       .limit(ProfTopK * pt)
       .groupBy($"user_a", $"user_b").agg(min($"dist").as("dist"))

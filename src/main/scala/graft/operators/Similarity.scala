@@ -372,7 +372,7 @@ object Similarity extends QueryModule {
   // and tables grow ×~1/p1 ≈ ×1.25 per added bit to hold the
   // 1−(1−p1^bits)^tables recall floor (multiprobe's Hamming-1 expansion
   // adds its usual extra-tables equivalent on top; rung recalls are
-  // measured in SimilarityScaleBench / BASELINE.md). Integer thresholds
+  // recorded in `SIMILARITY_SCALE_r*.json` / BASELINE.md). Integer thresholds
   // on the exact corpus count — never a libm expression, where rounding
   // could make the two engines disagree on the rung — anchored so the
   // sf0.01/sf0.1 gates stay on the r10-tuned (4, 6) base. The plane pool
@@ -423,8 +423,8 @@ object Similarity extends QueryModule {
   // multiple of expected occupancy — only the skew tail is truncated
   // (a uniform bucket never reaches 8× its expectation), and with
   // multiple independent tables a truncated-away true neighbor usually
-  // survives in another table (recall cost measured per rung in
-  // SimilarityScaleBench / BASELINE.md). The kept subset is a
+  // survives in another table (recall cost per rung recorded in
+  // `SIMILARITY_SCALE_r*.json` / BASELINE.md). The kept subset is a
   // DETERMINISTIC pseudo-random sample — ranked by the same knuth-hash
   // the dedup audit sampler uses, never by raw vec_id (ids correlate
   // with ingest order; hash rank keeps the cap unbiased) — so the
@@ -433,7 +433,8 @@ object Similarity extends QueryModule {
   // so gated hashes sit on the uncapped base rung, and the QUERY side
   // is never capped (a query always probes its own buckets).
   //
-  // Mult choice is MEASURED (CapSweep, 40k-vector rung (9,10), bucket
+  // Mult choice is MEASURED (BASELINE.md "Hot-bucket postings caps",
+  // round 14; 40k-vector rung (9,10), bucket
   // sizes mean 41 / p99 591 / max 1269): deeper caps trade recall for
   // volume near-linearly — mult 8 cut candidates/query 43% but
   // multiprobe recall 0.545→0.484, mult 4 → 0.425 — because sign-LSH
@@ -537,20 +538,14 @@ object Similarity extends QueryModule {
     * and re-attaches vectors once per SURVIVING pair, with AQE free to
     * broadcast the small query relation). */
   private[graft] def lshCandidates(e: DataFrame, buckets: DataFrame,
-                                   corpusBuckets: DataFrame,
-                                   dedup: Boolean = true): DataFrame = {
+                                   corpusBuckets: DataFrame): DataFrame = {
     val qb = buckets.join(queriesOf(e), col("vec_id") === col("query_id"))
       .select(col("query_id"), col("tbl"), col("bucket"))
-    val pairs = qb
-      .join(corpusBuckets.select(col("vec_id").as("neighbor_id"), col("tbl"), col("bucket")),
+    qb.join(corpusBuckets.select(col("vec_id").as("neighbor_id"), col("tbl"), col("bucket")),
         Seq("tbl", "bucket"))
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"))
-    // dedup=false exposes the pre-distinct stream so volume probes can
-    // HLL-count it with NO pair-stream shuffle (the EvRungProbe r19
-    // treatment; the exact .distinct() count at the 4M rung was its own
-    // ~10⁹-row shuffle and half of that probe's disk exhaustion)
-    if (dedup) pairs.distinct() else pairs
+      .distinct()
   }
 
   /** Corpus-side bucket postings for the registered LSH queries: twin
@@ -583,7 +578,7 @@ object Similarity extends QueryModule {
     * equi-join — the property that makes LSH shuffle-friendly at 100 TB.
     * Exact cosine ranks candidates, so output quality is recall-bounded
     * only; measured recall@5 and candidate volume vs the single-probe
-    * form in SimilarityScaleBench (BASELINE.md). */
+    * form are recorded in `SIMILARITY_SCALE_r*.json` (BASELINE.md). */
   /** Multi-probe candidate generation from prepared query buckets
     * `(query_id, qv, qnorm, tbl, bucket)`: each query probes its own
     * bucket plus the [[BITS]] Hamming-1 flips in every table, then joins
@@ -677,7 +672,7 @@ object Similarity extends QueryModule {
   // pt · (1 + [[LshRankedProbeMult]]) at EVERY rung — decoupled from
   // bits — and the probe set is by construction a SUBSET of the
   // all-flips set (SimilaritySpec pins both properties; recall per rung
-  // is measured in SimilarityScaleBench). Margins rank on
+  // is in BASELINE.md "Ranked (query-directed) multi-probe"). Margins rank on
   // round(|dot|, 6) with (tbl, bit) tie-breaks — the round-before-rank
   // determinism convention — and the DuckDB oracle rebuilds the same
   // margins from the inlined integer plane matrix.
@@ -704,15 +699,7 @@ object Similarity extends QueryModule {
         expr("shiftleft(CAST(1 AS BIGINT), j)").as("flip"))
   }
 
-  def topkLshMultiprobeRanked(s: SparkSession, dir: String): DataFrame =
-    topkRanked(s, dir, LshRankedProbeMult)
-
-  /** [[topkLshMultiprobeRanked]] with a probe-budget OVERRIDE (extra
-    * probes = `mult · tables`) for the calibration sweep
-    * ([[graft.tools.SimilarityScaleBench]]); the registered query always
-    * passes [[LshRankedProbeMult]]. */
-  private[graft] def topkRanked(s: SparkSession, dir: String,
-                                mult: Int): DataFrame = {
+  def topkLshMultiprobeRanked(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = vecs(s, dir)
     val n = e.count()
@@ -722,7 +709,7 @@ object Similarity extends QueryModule {
     val q = queriesOf(e)
     val qb = buckets.join(q, $"vec_id" === $"query_id")
       .select($"query_id", $"tbl", $"bucket")
-    val flipped = qb.join(rankedFlips(q, pt, pb, mult * pt),
+    val flipped = qb.join(rankedFlips(q, pt, pb, LshRankedProbeMult * pt),
         Seq("query_id", "tbl"))
       .select($"query_id", $"tbl", $"bucket".bitwiseXOR($"flip").as("bucket"))
     // slim probe → bucket join → distinct pairs (the r13 slim-pair shape
@@ -1283,7 +1270,7 @@ object Similarity extends QueryModule {
   // 24/64 = 37.5% → 32/128 = 25% → 48/256 = 18.75% → 64/512 = 12.5%.
   // nprobe still RISES in absolute terms (more, smaller cells need more
   // probes for the same recall mass — the Lv'07 observation), and the
-  // measured recall per rung is recorded in SimilarityScaleBench /
+  // measured recall per rung is recorded in `SIMILARITY_SCALE_r*.json` /
   // BASELINE.md. Integer thresholds on the exact corpus count (never a
   // libm expression — the [[LshSteps]] / `EventOps.profParams` contract),
   // anchored above every driver SF (sf0.1 = 2,000 vectors) so the gated
@@ -1610,37 +1597,14 @@ object Similarity extends QueryModule {
 
   /** The inverted-list relation `(vec_id, cid, code0..7)`: cell
     * assignment merged with the PQ codes, built once per index (see
-    * [[IvfPqRelations]]). Exposed separately so the dial sweep can
-    * re-derive postings for a retrained PQ half against the same coarse
-    * quantizer. */
-  private[graft] def ivfPqPostings(e: DataFrame, cent: DataFrame,
-                                   cbk: DataFrame): DataFrame = {
+    * [[IvfPqRelations]]). */
+  private def ivfPqPostings(e: DataFrame, cent: DataFrame,
+                            cbk: DataFrame): DataFrame = {
     val codes = pqAssign(e, cbk).select(
       col("vec_id") +:
         (0 until PqBlocks).map(b => col(s"m$b.c").as(s"code$b")): _*)
     cellAssignment(e, cent).select(col("vec_id"), col("cid"))
       .join(codes, "vec_id")
-  }
-
-  /** Dial-sweep serve ([[graft.tools.SimilarityScaleBench]] only): serve
-    * from `idx` with an overridden nprobe and/or a PQ half retrained at
-    * sub-codebook size `ks` — the coarse quantizer (cent/assign) is
-    * PQ-independent and reused, so a ks point costs one codebook train +
-    * one encode, not a full index build. Everything downstream
-    * (cid-keyed LUT maps, ADC, shortlist, rerank) is size-agnostic. */
-  private[graft] def ivfPqServeDial(queries: DataFrame, e: DataFrame,
-      idx: IvfPqRelations, ks: Option[Int], nprobe: Int,
-      shortlist: Int): DataFrame = {
-    val (cbk, postings) = ks match {
-      case Some(n) =>
-        // retrain the PQ half only; re-derive postings against the
-        // reused coarse quantizer (one codebook train + one merge)
-        val c = pqCodebook(e, n)
-        (c, ivfPqPostings(e, idx.cent, c))
-      case None => (idx.cbk, idx.postings)
-    }
-    ivfPqServe(queries, e, idx.cent, postings, cbk,
-      nprobe = nprobe, excludeSelf = true, shortlist = shortlist)
   }
 
   /** Serve `(query_id, qv, qnorm)` queries from a prebuilt

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Sessions
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -222,8 +223,8 @@ object AnnServeStream {
     * probes its own buckets plus the `mult · tables` single-bit flips
     * with the smallest projection margins. Probe count is
     * `tables · (1 + mult)` at every rung, so per-query serve cost stops
-    * riding the corpus ladder; the recall trade per rung is measured in
-    * SimilarityScaleBench (`ann_ranked_sweep`). Everything is
+    * riding the corpus ladder; the recall trade per rung is recorded in
+    * the `ann_ranked_sweep` rows of `SIMILARITY_SCALE_r*.json`. Everything is
     * query-side — the index, its capped postings, and the stored rung
     * are shared with the all-flips form unchanged. Same serving
     * contract: no self-exclusion, and a corpus-member query still
@@ -392,7 +393,8 @@ object AnnServeJob {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val spark = TaxiJobs.session("AnnServe")
+    val spark = Sessions.create("AnnServe")
+    if (StateStores.rocksDbRequested) StateStores.useRocksDb(spark)
     run(spark,
       opts.getOrElse("corpus", "corpus"),
       opts.getOrElse("input", "queries"),

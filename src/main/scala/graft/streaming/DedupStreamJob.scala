@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -62,7 +63,8 @@ object DedupStreamJob {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val spark = TaxiJobs.session("DedupStream")
+    val spark = Sessions.create("DedupStream")
+    if (StateStores.rocksDbRequested) StateStores.useRocksDb(spark)
     run(spark,
       opts.getOrElse("corpus", "corpus"),
       opts.getOrElse("input", "incoming"),

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Sessions
 import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -133,7 +134,8 @@ object PqServeJob {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val spark = TaxiJobs.session("PqServe")
+    val spark = Sessions.create("PqServe")
+    if (StateStores.rocksDbRequested) StateStores.useRocksDb(spark)
     run(spark,
       opts.getOrElse("corpus", "corpus"),
       opts.getOrElse("input", "queries"),

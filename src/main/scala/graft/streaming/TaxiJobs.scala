@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Sessions
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -121,35 +122,13 @@ object TaxiJobs {
     checkpoint.foreach(c => w = w.option("checkpointLocation", c))
     w.start()
   }
-
-  /** Session for the runnable apps (the reference leans on the PySpark
-    * shell bootstrap, `Task2.py:1`; SURVEY §2.10).
-    * `SPARK_GRAFT_STATE_STORE=rocksdb` switches every stateful operator
-    * in the app to the RocksDB provider (see [[StateStores]]). */
-  private[streaming] def session(name: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(name)
-      .config("spark.sql.shuffle.partitions",
-              sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // The file source lists each trigger's files as separate paths. At
-      // the apps' 60 files a trigger that crosses the default threshold of
-      // 32, so every trigger ran a 60-task Spark job to list files the
-      // source had already found. List them on the driver instead.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-              Int.MaxValue.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    if (StateStores.rocksDbRequested) StateStores.useRocksDb(spark)
-    spark
-  }
 }
 
 /** `Task2.py` as a runnable app. */
 object Task2Job {
   def main(args: Array[String]): Unit = {
-    val spark = TaxiJobs.session("Task2")
+    val spark = Sessions.create("Task2")
+    if (StateStores.rocksDbRequested) StateStores.useRocksDb(spark)
     TaxiJobs.task2(spark,
       args.lift(0).getOrElse("taxi-data"),
       args.lift(1).getOrElse("output")).awaitTermination()
@@ -159,7 +138,8 @@ object Task2Job {
 /** `Task3.py` as a runnable app. */
 object Task3Job {
   def main(args: Array[String]): Unit = {
-    val spark = TaxiJobs.session("Task3")
+    val spark = Sessions.create("Task3")
+    if (StateStores.rocksDbRequested) StateStores.useRocksDb(spark)
     TaxiJobs.task3(spark,
       args.lift(0).getOrElse("taxi-data"),
       args.lift(1).getOrElse("output")).awaitTermination()
@@ -173,7 +153,8 @@ object Task4Job {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val spark = TaxiJobs.session("Task4")
+    val spark = Sessions.create("Task4")
+    if (StateStores.rocksDbRequested) StateStores.useRocksDb(spark)
     TaxiJobs.task4(spark,
       opts.getOrElse("input", "taxi-data"),
       opts.getOrElse("output", "output"),

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{asc, desc}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -63,7 +64,7 @@ object WordCountJob {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().getOrCreate()
+    val spark = Sessions.create("WordCount")
     spark.sparkContext.setLogLevel("ERROR")
     run(spark,
       args.lift(0).getOrElse("localhost"),

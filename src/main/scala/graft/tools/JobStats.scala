@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Work-based per-query profile: jobs, stages, tasks, shuffle bytes,
@@ -14,17 +13,7 @@ object JobStats {
     val names = if (args.nonEmpty) args(0).split(",").toSeq
                 else graft.SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill files on the fastest local storage — see
-      // [[graft.Sessions.localDir]] (tmpfs here; NVMe on a cluster)
-      .config("spark.local.dir", graft.Sessions.localDir)
-      .getOrCreate()
+    val spark = graft.Sessions.create("JobStats")
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize a K× scale-up of a testdata dir (default: sf0.1 × 10 ≈ sf1)
@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   *   - `documents.text` for r > 0 gets every 3rd token suffixed `~r`:
   *     every 3-token shingle ([[graft.functions.ShingleArray]]) contains
   *     a suffixed token, so replicas share NO shingles — near-dup pair
-  *     output grows K×, not K²× (same construction as
-  *     [[DedupScaleBench]], which pinned the linearity), while 2/3 of
+  *     output grows K×, not K²× (same construction as the round-4
+  *     dedup scale-up, BASELINE.md, which pinned the linearity), while 2/3 of
   *     tokens keep their identity for stopword/char-distribution ops;
   *   - `embeddings.embedding` is rotated by `(r * 7) mod dim` positions:
   *     a coordinate permutation is orthogonal, so WITHIN a replica all
@@ -49,14 +49,7 @@ object MakeScale {
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
     val tableFilter = args.lift(3).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.create("MakeScale")
     spark.sparkContext.setLogLevel("WARN")
 
     def rep(base: DataFrame)(f: (DataFrame, Int) => DataFrame): DataFrame =

@@ -34,15 +34,7 @@ object PlanDump {
     val registered = graft.SparkEntry.queries.keys.toSeq.sorted
     val names = if (filtered) rest(1).split(",").toSeq else registered
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$Cpus]")
-      .config("spark.sql.shuffle.partitions", Cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Sessions.localDir)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-      .getOrCreate()
+    val spark = graft.Sessions.create("PlanDump", Cpus)
     spark.sparkContext.setLogLevel("WARN")
     if (!check) Files.createDirectories(dir)
     val bad = names.flatMap { name =>

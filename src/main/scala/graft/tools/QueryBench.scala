@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc per-query timer for iterating on a single operator: runs the
   * named queries (args; default = all) `SPARK_GRAFT_REPS` times each
@@ -14,18 +13,7 @@ object QueryBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill files on the fastest local storage — see
-      // [[graft.Sessions.localDir]] (tmpfs here; NVMe on a cluster)
-      .config("spark.local.dir", graft.Sessions.localDir)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "8192"))
-      .getOrCreate()
+    val spark = graft.Sessions.create("QueryBench")
     spark.sparkContext.setLogLevel("WARN")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     for (name <- names) {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Shared replica transform for synthetic embedding scale-ups
-  * ([[MakeScale]], [[SimilarityScaleBench]]): coordinate rotation
+  * ([[MakeScale]]): coordinate rotation
   * composed with a per-replica pseudo-random ±1 sign diagonal.
   *
   * Both factors are orthogonal, so WITHIN a replica every norm, dot
@@ -30,13 +30,6 @@ object ScaleVecs {
 
   /** Largest per-row embedding dim the sign tables cover. */
   val MaxDim = 512
-
-  /** Identifies the transform construction. Bump when [[replicaTransform]]
-    * changes shape — corpus-reuse manifests ([[SimilarityScaleBench]]) key
-    * on this, so a cached corpus built by an OLDER construction is
-    * rebuilt instead of silently measured as if it were current
-    * (ADVICE r19: a bare `_SUCCESS` check cannot tell the two apart). */
-  val TransformVersion = "rot7xsigndiag-v1"
 
   /** splitmix64 — full-avalanche 64-bit mixer (public domain, Steele et
     * al. 2014); bit 37 of the mix of (replica, coordinate) is the sign. */

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Throwaway measurement probes for the optimization round (r21):
   * A/B a single SQL conf over a set of registered queries (noop sink).
@@ -18,19 +17,7 @@ object Scratch {
     val confKey = if (args.length > 1) args(1) else null
     val confVal = if (args.length > 2) args(2) else null
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill files on the fastest local storage — see
-      // [[graft.Sessions.localDir]] (tmpfs here; NVMe on a cluster)
-      .config("spark.local.dir", graft.Sessions.localDir)
-      // match Bench's session confs so the A/B measures what the bench runs
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "8192"))
-      .getOrCreate()
+    val spark = graft.Sessions.create("Scratch")
     spark.sparkContext.setLogLevel("WARN")
     val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

@@ -34,7 +34,7 @@ class EventOpsSpec extends AnyFunSuite {
     * bucketed top-20 must recover most of the brute-force top-20 at the
     * oracle scale factor. After the round-10 18×5/w=500 retune (selectivity
     * 0.38 → 0.196 at sf0.1) the measured recall is 0.80 at sf0.01 and 0.95
-    * at sf0.1 (SimilarityScaleBench, BASELINE.md; sf0.01 is the
+    * at sf0.1 (BASELINE.md "Similarity scaling"; sf0.01 is the
     * intrinsically harder corpus — see the ProfTables scaladoc) — assert
     * ≥ 0.75 so the gate keeps headroom for testdata regeneration instead
     * of sitting exactly on the measured value. */
@@ -52,7 +52,7 @@ class EventOpsSpec extends AnyFunSuite {
     * switched on corpus size at 2M users — the gate corpora never reach
     * the fat regime, so without this pin a fat-path divergence would
     * only surface at million-user probe scale. Assert both regimes
-    * produce the identical top-20 through the full tsTopPairs tail
+    * produce the identical top-20 through the full tsSimilarity tail
     * (heap → dedup → final cut) at sf0.01. */
   test("tsScored broadcast and fat attach regimes agree end-to-end") {
     import spark.implicits._

@@ -360,12 +360,11 @@ class PlanSpec extends AnyFunSuite {
   test("scan fan-out: per-row text queries re-spread the 1-row-group scan (r22)") {
     val p = formatted("text_repetition")
     assert(p.contains("RoundRobinPartitioning"), p)
-    // and it is toggleable off (the A/B affordance the win was measured with)
-    spark.conf.set("graft.scan.fanout", "false")
-    try {
-      val off = formatted("text_repetition")
-      assert(!off.contains("RoundRobinPartitioning"), off)
-    } finally spark.conf.unset("graft.scan.fanout")
+    // and a scan that already splits to the session's parallelism is left as it is
+    val par = spark.sparkContext.defaultParallelism
+    val wide = spark.range(0, 100, 1, par).toDF()
+    assert(Tables.fanOutScan(wide) eq wide)
+    assert(Tables.fanOutScan(spark.range(0, 100, 1, 1).toDF()).rdd.getNumPartitions == par)
   }
 
   test("block pruning reads only (l_orderkey, l_shipdate) and partial-aggregates") {

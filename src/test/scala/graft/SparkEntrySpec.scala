@@ -8,14 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all specs (one JVM-wide session; suites reuse it). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.codegen.fallback", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = Sessions.create("test", 4)
+    // a codegen compile failure fails the spec instead of falling back
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    s
+  }
   val sf: String = "/root/testdata/sf0.001"
 
   /** Mixed into a suite: [[tempDir]] makes each directory under one root
