@@ -78,7 +78,7 @@ object PlanDump {
       else {
         val (a, b) = (old.split("\n", -1), fresh.split("\n", -1))
         val i = a.indices.find(i => i >= b.length || a(i) != b(i)).getOrElse(a.length)
-        Some(s"line ${i + 1}: ${a.lift(i).getOrElse("<end>").take(120)} → " +
+        Some(s"line ${i + 1}: ${a.lift(i).getOrElse("<end>").take(120)} -> " +
           b.lift(i).getOrElse("<end>").take(120))
       }
     }
