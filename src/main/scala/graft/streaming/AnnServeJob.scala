@@ -275,7 +275,7 @@ object AnnServeStream {
             k: Int = 5, checkpoint: Option[String] = None,
             kernel: ServeKernel = AllFlips)
            (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    var w = queries.writeStream
+    StreamLifecycle.start(queries.sparkSession, queries.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         val answers = kernel match {
@@ -283,9 +283,7 @@ object AnnServeStream {
           case Ranked(mult) => serveBatchRanked(batch, idx, k, mult)
         }
         onBatch(answers, epochId)
-      }
-    checkpoint.foreach(c => w = w.option("checkpointLocation", c))
-    w.start()
+      }, checkpoint)
   }
 }
 

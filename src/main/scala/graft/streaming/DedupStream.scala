@@ -140,12 +140,11 @@ object DedupStream {
     // terminated-before-listener races (ADVICE r16) — either would leak
     // the persisted corpus-shingle relation this release exists to plug.
     StreamLifecycle.withRelease(newDocs.sparkSession) {
-      newDocs.writeStream
+      StreamLifecycle.start(newDocs.sparkSession, newDocs.writeStream
         .outputMode("update")
         .foreachBatch { (batch: DataFrame, epochId: Long) =>
           onBatch(screenBatch(batch, corpusIdx, maxDf, cdf), epochId)
-        }
-        .start()
+        }, None)
     }(() => cdfDf.unpersist())
   }
 }

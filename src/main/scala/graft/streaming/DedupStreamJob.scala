@@ -46,14 +46,12 @@ object DedupStreamJob {
     // covers the throwing-start() / terminated-before-listener races
     // (ADVICE r16) on top of the plain termination path.
     StreamLifecycle.withRelease(spark) {
-      stream.writeStream
+      StreamLifecycle.start(spark, stream.writeStream
         .outputMode("update")
-        .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, epochId: Long) =>
           DedupStream.screenBatch(batch.select("doc_id", "text"), idx, maxDf, Some(cdf))
             .write.mode("overwrite").parquet(s"$outputDir/epoch=$epochId")
-        }
-        .start()
+        }, Some(checkpointDir))
     } { () => idx.unpersist(); cdf.unpersist() }
   }
 

@@ -82,13 +82,11 @@ object PqServeStream {
   def start(queries: DataFrame, idx: PqIndex, k: Int = 5,
             checkpoint: Option[String] = None)
            (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    var w = queries.writeStream
+    StreamLifecycle.start(queries.sparkSession, queries.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         onBatch(serveBatch(batch, idx, k), epochId)
-      }
-    checkpoint.foreach(c => w = w.option("checkpointLocation", c))
-    w.start()
+      }, checkpoint)
   }
 }
 

@@ -105,10 +105,9 @@ object SemDedupStream {
     * against the prepared index. */
   def start(newVecs: DataFrame, corpusIdx: SemIndex)
            (onBatch: (DataFrame, Long) => Unit): StreamingQuery =
-    newVecs.writeStream
+    StreamLifecycle.start(newVecs.sparkSession, newVecs.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         onBatch(screenBatch(batch, corpusIdx), epochId)
-      }
-      .start()
+      }, None)
 }

@@ -16,6 +16,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * bug). Here each sink collects ONCE and formats driver-side, writing
   * the intended per-window values — matching the sane subset of the
   * reference's golden files.
+  *
+  * Each job starts through [[StreamLifecycle.start]], so a checkpoint on
+  * the local file system is written through [[LocalCheckpointFileManager]]
+  * (no process started per checkpoint file) unless the session names its
+  * own manager. Checkpoints written before that resume unchanged.
   */
 object TaxiJobs {
 
@@ -37,15 +42,13 @@ object TaxiJobs {
             maxFilesPerTrigger: Int = 60): StreamingQuery = {
     val counts = TaxiPipelines.hourlyCounts(
       TaxiPipelines.scanGreen22(spark, input, streaming = true, maxFilesPerTrigger))
-    var w = counts.writeStream
+    StreamLifecycle.start(spark, counts.writeStream
       .outputMode("update")
       .foreachBatch { (df: DataFrame, _: Long) =>
         df.select("hour", "count").collect().foreach { r =>
           write(output, s"output-${hourStamp(r.getInt(0))}", r.getLong(1).toString)
         }
-      }
-    checkpoint.foreach(c => w = w.option("checkpointLocation", c))
-    w.start()
+      }, checkpoint)
   }
 
   /** Task3: hourly per-HQ counts → one `output3-{stamp}` file per updated
@@ -57,7 +60,7 @@ object TaxiJobs {
             maxFilesPerTrigger: Int = 60): StreamingQuery = {
     val counts = TaxiPipelines.hourlyHqCounts(
       TaxiPipelines.scanSplit24(spark, input, streaming = true, maxFilesPerTrigger))
-    var w = counts.writeStream
+    StreamLifecycle.start(spark, counts.writeStream
       .outputMode("update")
       .foreachBatch { (df: DataFrame, _: Long) =>
         val rows = df.select("hour", "headquarters", "count").collect()
@@ -82,9 +85,7 @@ object TaxiJobs {
             .mkString("\n")
           if (body.nonEmpty) write(output, name, body)
         }
-      }
-    checkpoint.foreach(c => w = w.option("checkpointLocation", c))
-    w.start()
+      }, checkpoint)
   }
 
   /** Task4: 10-minute per-HQ windows; per batch, the intra-batch trend
@@ -100,7 +101,7 @@ object TaxiJobs {
             maxFilesPerTrigger: Int = 60): StreamingQuery = {
     val counts = TaxiPipelines.tenMinHqCounts(
       TaxiPipelines.scanSplit24(spark, input, streaming = true, maxFilesPerTrigger))
-    var w = counts.writeStream
+    StreamLifecycle.start(spark, counts.writeStream
       .outputMode("update")
       .foreachBatch { (df: DataFrame, _: Long) =>
         // The whole batch is collected: Spark fails the trigger's state
@@ -118,9 +119,7 @@ object TaxiJobs {
             println(s"The number of arrivals to $hq has doubled from $p to $n at $t!")
           }
         }
-      }
-    checkpoint.foreach(c => w = w.option("checkpointLocation", c))
-    w.start()
+      }, checkpoint)
   }
 }
 

@@ -36,7 +36,7 @@ object WordCountJob {
       .option("host", host)
       .option("port", port)
       .load()
-    lines.writeStream
+    StreamLifecycle.start(spark, lines.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime("1 second"))
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -52,8 +52,7 @@ object WordCountJob {
             onBatch(top, overflow, id)
           }
         } finally counts.unpersist()
-      }
-      .start()
+      }, None)
   }
 
   private def printBatch(counts: Seq[(String, Long)], overflow: Long,
