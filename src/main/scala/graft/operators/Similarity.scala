@@ -979,6 +979,49 @@ object Similarity extends QueryModule {
     * FAISS convention), so the scale never binds. */
   private[graft] val PqScale = (1L << 30).toDouble
 
+  /** [[trainSample]] collected to the driver, once per index build. */
+  private[graft] def trainRows(e: DataFrame): TrainRows = {
+    val withNorm = e.columns.contains("norm")
+    val rows = trainSample(e)
+      .select(Seq(col("vec_id"), col("v")) ++ (if (withNorm) Seq(col("norm")) else Nil): _*)
+      .collect()
+    def elems(r: org.apache.spark.sql.Row) =
+      if (r.isNullAt(1)) null else r.getSeq[Any](1)
+    new TrainRows(rows.map(_.getLong(0)),
+      rows.map(r => Option(elems(r)).map(_.map {
+        case d: Double => d
+        case _ => 0.0
+      }.toArray).orNull),
+      rows.map(r => Option(elems(r)).filter(_.contains(null))
+        .map(_.map(_ == null).toArray).orNull),
+      rows.map(r => if (withNorm && !r.isNullAt(2)) r.getDouble(2) else Double.NaN))
+  }
+
+  private[graft] def ivfCentroidsOf(s: SparkSession, rows: TrainRows,
+                                    cells: Int): DataFrame = {
+    require(cells <= TrainCap)
+    // Spark's `norm > 0`: NaN sorts greatest, a null norm filters out
+    val seeds = rows.ids.indices.filter(i => rows.ids(i) < cells &&
+      rows.v(i) != null && java.lang.Double.compare(rows.norm(i), 0.0) > 0)
+      .sortBy(rows.ids(_)).toArray
+    val (cent, cnorm) = Lloyd.train(rows, seeds, 0, DIM, spherical = true)
+    import s.implicits._
+    broadcast(s.createDataset(seeds.indices.map(c =>
+      (rows.ids(seeds(c)), cent(c).toSeq, cnorm(c)))).toDF("cid", "cv", "cnorm"))
+  }
+
+  private[graft] def pqCodebookOf(s: SparkSession, rows: TrainRows,
+                                  ncent: Int): DataFrame = {
+    require(ncent <= TrainCap)
+    val seeds = rows.ids.indices.filter(rows.ids(_) < ncent).sortBy(rows.ids(_)).toArray
+    val blocks = (0 until PqBlocks).map(b =>
+      Lloyd.train(rows, seeds, b * PqSub, PqSub, spherical = false)._1)
+    import s.implicits._
+    // (cid, cv): the 8 block centroids concatenated in block order
+    broadcast(s.createDataset(seeds.indices.map(c =>
+      (rows.ids(seeds(c)), blocks.flatMap(_(c)).toSeq))).toDF("cid", "cv"))
+  }
+
   /** The REFINED PQ codebook `(cid, cv)`: block b's 16-entry
     * sub-codebook starts as the b-th 8-dim slice of the first 16 corpus
     * vectors (the sample-as-codebook convention of [[centroidsOf]]) and
