@@ -931,41 +931,6 @@ object Similarity extends QueryModule {
   private def trainSample(e: DataFrame): DataFrame =
     e.filter(col("vec_id") < TrainCap)
 
-  /** Relations persisted INSIDE quantizer training (the xb block
-    * slices; per-step codebooks are driver-local since r21 and no
-    * longer cached). Batch queries rely on the
-    * harness clearCache-per-query lifecycle (see [[graft.operators.Dedup]]),
-    * but a long-running serving job rebuilds indexes inside ONE session.
-    * Each index build therefore collects its caches into its OWN
-    * [[TrainingScope]] (ADVICE r10: the former global registry grew for
-    * the app's lifetime, and one job's release drained a concurrent
-    * job's training caches mid-build): [[withTrainingScope]] installs a
-    * scope thread-locally for the duration of a build and returns it so
-    * the owner — `PqIndex` — releases exactly its own caches. Training
-    * calls outside any scope (the registered batch queries) fall back
-    * to the global scope, drained by [[releaseTrainingCaches]] / the
-    * harness clearCache. */
-  private[graft] final class TrainingScope {
-    private val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    private[Similarity] def add(df: DataFrame): DataFrame =
-      synchronized { caches += df; df.persist() }
-    def release(): Unit =
-      synchronized { caches.foreach(_.unpersist()); caches.clear() }
-  }
-  private val globalTrainingScope = new TrainingScope
-  private val currentTrainingScope =
-    new scala.util.DynamicVariable[TrainingScope](globalTrainingScope)
-  private def persistTraining(df: DataFrame): DataFrame =
-    currentTrainingScope.value.add(df)
-  /** Run `body` (an index build) with a fresh training-cache scope;
-    * returns (result, scope). The caller owns the scope's lifecycle. */
-  private[graft] def withTrainingScope[A](body: => A): (A, TrainingScope) = {
-    val scope = new TrainingScope
-    (currentTrainingScope.withValue(scope)(body), scope)
-  }
-  private[graft] def releaseTrainingCaches(): Unit =
-    globalTrainingScope.release()
-
   /** Fixed-point scale for deterministic k-means centroid updates:
     * `floor(x · 2³⁰)` is EXACT for any double x (power-of-two product +
     * floor never round), so per-cluster component sums are exact
@@ -980,7 +945,9 @@ object Similarity extends QueryModule {
   private[graft] val PqScale = (1L << 30).toDouble
 
   /** [[trainSample]] collected to the driver, once per index build. */
-  private[graft] def trainRows(e: DataFrame): TrainRows = {
+  /** [[trainSample]] collected to the driver: the input of both
+    * quantizer trainings, collected once per index build. */
+  private def trainRows(e: DataFrame): TrainRows = {
     val withNorm = e.columns.contains("norm")
     val rows = trainSample(e)
       .select(Seq(col("vec_id"), col("v")) ++ (if (withNorm) Seq(col("norm")) else Nil): _*)
@@ -997,8 +964,8 @@ object Similarity extends QueryModule {
       rows.map(r => if (withNorm && !r.isNullAt(2)) r.getDouble(2) else Double.NaN))
   }
 
-  private[graft] def ivfCentroidsOf(s: SparkSession, rows: TrainRows,
-                                    cells: Int): DataFrame = {
+  private def ivfCentroidsOf(s: SparkSession, rows: TrainRows,
+                             cells: Int): DataFrame = {
     require(cells <= TrainCap)
     // Spark's `norm > 0`: NaN sorts greatest, a null norm filters out
     val seeds = rows.ids.indices.filter(i => rows.ids(i) < cells &&
@@ -1010,8 +977,8 @@ object Similarity extends QueryModule {
       (rows.ids(seeds(c)), cent(c).toSeq, cnorm(c)))).toDF("cid", "cv", "cnorm"))
   }
 
-  private[graft] def pqCodebookOf(s: SparkSession, rows: TrainRows,
-                                  ncent: Int): DataFrame = {
+  private def pqCodebookOf(s: SparkSession, rows: TrainRows,
+                           ncent: Int): DataFrame = {
     require(ncent <= TrainCap)
     val seeds = rows.ids.indices.filter(rows.ids(_) < ncent).sortBy(rows.ids(_)).toArray
     val blocks = (0 until PqBlocks).map(b =>
@@ -1022,104 +989,28 @@ object Similarity extends QueryModule {
       (rows.ids(seeds(c)), blocks.flatMap(_(c)).toSeq))).toDF("cid", "cv"))
   }
 
-  /** The REFINED PQ codebook `(cid, cv)`: block b's 16-entry
-    * sub-codebook starts as the b-th 8-dim slice of the first 16 corpus
-    * vectors (the sample-as-codebook convention of [[centroidsOf]]) and
-    * is then improved by [[PqLloydIters]] deterministic Lloyd steps —
-    * assign each block slice to its nearest centroid (rounded score,
-    * lowest-cid ties), recompute each centroid as the exact
-    * scaled-integer mean of its members ([[PqScale]]), empty clusters
-    * keep their previous centroid. Measured at sf0.1: mean ‖v−recon‖²
-    * 0.775 → 0.605 and serve recall@5 at R=200 0.68 → 0.82 vs the
-    * unrefined donors.
+  /** The REFINED PQ codebook `(cid, cv)`: block b's `ncent`-entry
+    * sub-codebook starts as the b-th 8-dim slice of the first `ncent`
+    * corpus vectors (the sample-as-codebook convention of [[centroidsOf]])
+    * and is then improved by [[PqLloydIters]] deterministic Lloyd steps —
+    * assign each block slice to its nearest centroid (score
+    * `round(‖c‖² − 2·x·c, 6)`, lowest-cid ties), recompute each centroid
+    * as the exact scaled-integer mean of its members ([[PqScale]]), empty
+    * clusters keep their previous centroid. Measured at sf0.1: mean
+    * ‖v−recon‖² 0.775 → 0.605 and serve recall@5 at R=200 0.68 → 0.82 vs
+    * the unrefined donors.
     *
     * Everything is data-derived and fp-deterministic, so the DuckDB
-    * oracle retrains the SAME codebook bit-for-bit from the table. A
-    * production pipeline runs exactly this as an offline DataFrame job
-    * over a sample and ships the result as this tiny broadcast relation.
+    * oracle retrains the SAME codebook bit-for-bit from the table
+    * ([[pqCodesCte]]).
     *
-    * Scale: each Lloyd step is one corpus scan against the ≤512-row
-    * broadcast codebook and one (block, cid)-keyed partial-agg shuffle
-    * carrying 8 exact longs + a count per group; the corpus never
-    * reshuffles. The codebook itself lives on the driver between steps
-    * (the Spark-ML KMeans convention — a ladder-bounded ≤512-row
-    * collect per step, r21), so downstream consumers get a local
-    * broadcast relation instead of replaying training lineage. */
-  private[graft] def pqCodebook(e: DataFrame, ncent: Int = NCENT): DataFrame = {
-    val s = e.sparkSession
-    import s.implicits._
-    def slices(src: DataFrame, name: String) = src.select($"vec_id", explode(
-      array((0 until PqBlocks).map(b =>
-        struct(lit(b).as("b"), slice($"v", b * PqSub + 1, PqSub).as(name))): _*)).as("t"))
-    val xb = persistTraining(slices(trainSample(e), "xb")
-      .select($"vec_id", $"t.b".as("b"), $"t.xb".as("xb")))
-    // r22 (guide §2.6): materialize the xb training cache CONCURRENTLY
-    // with the seeds collect below — the two actions are independent
-    // (seeds read the first ncent corpus rows; xb slices the TrainCap
-    // sample), and the former lazy materialization sat serially inside
-    // the first Lloyd step's job instead.
-    val xbWarm = scala.concurrent.Future(xb.count())(
-      scala.concurrent.ExecutionContext.Implicits.global)
-    // r21 (optimization): the codebook UPDATE is driver-local — the
-    // Spark-ML KMeans shape (assignment + per-cluster sums stay a
-    // distributed map-side-combined aggregation; the ≤ PqBlocks × ks ≤
-    // 512-row sums relation is collected and the means computed on the
-    // driver, bounded by the LADDER, never the corpus). Identical
-    // numbers by construction: the same floor(x·2³⁰) longs arrive via
-    // collect, and (S/2³⁰)/n is the same IEEE divide whichever JVM runs
-    // it ([[PqScale]]). What it buys: the former per-iteration
-    // broadcast-join + left-join + persist chain cost 3-4 sequential
-    // 1-task stages per Lloyd step at the bench SF (measured: the PQ
-    // family ran 23-55 one-task stages per query, wall 2-4× its task
-    // CPU); now each step is ONE distributed job. Seeds are the same
-    // first-ncent block slices, collected once (≤ 512 rows).
-    var cb: Array[(Int, Long, Array[Double])] =
-      slices(e.filter($"vec_id" < ncent), "cb")
-        .select($"t.b".as("b"), $"vec_id".as("cid"), $"t.cb".as("cb"))
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-        .sortBy(t => (t._1, t._2))
-    scala.concurrent.Await.result(xbWarm,
-      scala.concurrent.duration.Duration.Inf)
-    for (_ <- 1 to PqLloydIters) {
-      val cbDf = broadcast(
-        s.createDataset(cb.toSeq.map(t => (t._1, t._2, t._3.toSeq)))
-          .toDF("b", "cid", "cb"))
-      // xb rides inside the struct-min (cid is unique, so the comparison
-      // never reaches it): the argmin and the member slice come out of
-      // ONE map-side-combined aggregation — no corpus-sized re-join.
-      val sums = xb.join(cbDf, "b")
-        .withColumn("sc",
-          round(vectorDot($"cb", $"cb") - lit(2.0) * vectorDot($"xb", $"cb"), 6))
-        .groupBy($"vec_id", $"b")
-        .agg(min(struct($"sc".as("sc"), $"cid".as("c"), $"xb".as("xb"))).as("m"))
-        .select($"b", $"m.c".as("cid"), $"m.xb".as("xb"))
-        .groupBy($"b", $"cid")
-        .agg(count(lit(1)).as("n"),
-          (0 until PqSub).map(j =>
-            sum(floor(element_at($"xb", j + 1) * PqScale).cast("long")).as(s"s$j")): _*)
-        .collect()
-      val byKey = sums.map(r => (r.getInt(0), r.getLong(1)) -> r).toMap
-      cb = cb.map { case (b, cid, prev) =>
-        byKey.get((b, cid)) match {
-          case Some(r) =>
-            // the exact scaled-integer mean: (S/2³⁰)/n, the identical
-            // IEEE sequence the former in-plan expression evaluated
-            val n = r.getLong(2).toDouble
-            (b, cid, Array.tabulate(PqSub)(j =>
-              (r.getLong(3 + j).toDouble / PqScale) / n))
-          case None => (b, cid, prev) // empty cluster keeps its centroid
-        }
-      }
-    }
-    // final shape: (cid, cv) with the 8 block slices concatenated in
-    // block order — the former sort_array(collect_list(struct(b, cb)))
-    // flatten, now a local groupBy of ≤ 512 rows
-    val rows = cb.groupBy(_._2).toSeq.sortBy(_._1).map { case (cid, blocks) =>
-      (cid, blocks.sortBy(_._1).flatMap(_._3).toSeq)
-    }
-    broadcast(s.createDataset(rows).toDF("cid", "cv"))
-  }
+    * Scale: training reads the [[TrainCap]]-bounded sample, collected to
+    * the driver once ([[trainRows]]; at most 65,536 × 64 doubles, 32 MB),
+    * and the 8 blocks train there in plain arrays ([[Lloyd]]): one Spark
+    * job at any corpus size. The result is a ≤ 512-row local broadcast
+    * relation. */
+  private[graft] def pqCodebook(e: DataFrame, ncent: Int = NCENT): DataFrame =
+    pqCodebookOf(e.sparkSession, trainRows(e), ncent)
 
   /** Adds the 8 per-block scores `s_b = ‖c_b‖² − 2·(x_b · c_b)` to a
     * (row × donor) pair frame — the rank-equivalent of the block squared
@@ -1358,107 +1249,30 @@ object Similarity extends QueryModule {
       case (acc, (thr, c, p)) => if (n >= thr) (c, p) else acc
     }
 
-  /** Spherical-k-means-refined coarse centroids for [[topkIvfPq]]:
-    * [[IvfPqCells]] cells seeded from the first 64 corpus vectors, then
-    * [[PqLloydIters]] deterministic Lloyd steps — assignment by rounded
-    * cosine (lowest-cid ties, the [[cellAssignment]] convention), update
-    * by the exact scaled-integer mean ([[PqScale]]); empty cells keep
-    * their previous centroid. The mean is NOT renormalized: cosine
+  /** Spherical-k-means-refined coarse centroids `(cid, cv, cnorm)` for
+    * [[topkIvfPq]]: `cells` cells seeded from the first `cells` corpus
+    * vectors, then [[PqLloydIters]] deterministic Lloyd steps — assignment
+    * by rounded cosine (lowest-cid ties, the [[semAssign]] convention),
+    * update by the exact scaled-integer mean ([[PqScale]]); empty cells
+    * keep their previous centroid. The mean is NOT renormalized: cosine
     * assignment divides by the centroid norm, so only the direction
     * matters — this is spherical k-means in its division-invariant form,
-    * with every number reproducible by the oracle.
+    * with every number reproducible by the oracle ([[ivfKmCte]]).
     *
-    * Scale: per step, one training-sample scan against the 64-row
-    * broadcast codebook (assignment is the map-side-combined
-    * `min(struct(...))` of [[cellAssignment]] — one row per vector
-    * reaches the shuffle, never a window or global sort) and one
-    * cid-keyed partial-agg shuffle of 64 exact longs + count per cell.
-    * 64 ≈ √2000 cells at the bench SF mirrors the √n production
-    * sizing; at 10⁹ rows the cell count grows and [[TrainCap]] bounds
-    * the sample, not the algorithm. */
+    * Zero-norm CENTROIDS cannot arise (ADVICE r15): one would score
+    * NaN→1.0 (d = 0) against EVERY vector and capture a whole step's
+    * assignment, an edge the two engines order differently. Degenerate
+    * seeds are filtered (norm > 0), and a mean that cancels to the zero
+    * vector keeps the previous centroid, both mirrored predicate for
+    * predicate in [[semKmCte]]/[[ivfKmCte]].
+    *
+    * Scale: training reads the [[TrainCap]]-bounded sample, collected to
+    * the driver once ([[trainRows]]), and runs there in plain arrays
+    * ([[Lloyd]]): one Spark job at any corpus size. 64 ≈ √2000 cells at
+    * the bench SF mirrors the √n production sizing. */
   private[graft] def ivfPqCentroids(e: DataFrame,
-                                    cells: Int = IvfPqCells): DataFrame = {
-    val s = e.sparkSession
-    import s.implicits._
-    // Zero-norm CENTROIDS are impossible by construction (ADVICE r15):
-    // training assignment rides [[semAssign]], whose nanvl(ccos, 1.0)
-    // exists for zero-norm VECTORS (pin to lowest cid) — but a
-    // zero-norm centroid would score NaN→1.0 (d = 0) against EVERY
-    // vector and capture an entire iteration's assignment. Guard at
-    // both places one could arise: degenerate seeds are filtered
-    // (norm > 0), and a Lloyd mean that cancels to the zero vector
-    // keeps the previous centroid (the empty-cell rule). Both guards
-    // are mirrored predicate-for-predicate in [[semKmCte]]/[[ivfKmCte]]
-    // so the NaN branch is unreachable in either engine, rather than
-    // relying on Spark's struct-min and DuckDB's NaN-sorts-greatest
-    // agreeing on an edge they in fact order differently.
-    // r21 (optimization): driver-local codebook UPDATE, the
-    // [[pqCodebook]] treatment — assignment + per-cell sums stay the
-    // distributed map-side-combined aggregation over [[trainSample]];
-    // the ≤ cells ≤ 4,096-row sums relation (a LADDER bound, never the
-    // corpus) is collected and the means computed locally with the
-    // identical IEEE sequence ((S/2³⁰)/n per component, sequential
-    // dot + Math.sqrt for cnorm — [[graft.functions.VectorDot]] is the
-    // same left-to-right loop). Cuts 3-4 sequential 1-task stages per
-    // Lloyd step (the former broadcast-join + left-join + persist
-    // chain) down to ONE distributed job per step.
-    var cb: Array[(Long, Array[Double], Double)] =
-      e.filter($"vec_id" < cells && $"norm" > 0)
-        .select($"vec_id".as("cid"), $"v".as("cv"), $"norm".as("cnorm"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-        .sortBy(_._1)
-    def seqDot(a: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += a(i) * a(i); i += 1 }
-      acc
-    }
-    for (_ <- 1 to PqLloydIters) {
-      val cbDf = broadcast(
-        s.createDataset(cb.toSeq.map(t => (t._1, t._2.toSeq, t._3)))
-          .toDF("cid", "cv", "cnorm"))
-      // training runs on the bounded [[trainSample]] via the
-      // [[semAssign]] argmin with the member vector riding INSIDE the
-      // struct-min (the [[cellAssignment]] payload trick, r21 — the
-      // former slim-assign + re-join-for-v shape cost one extra join
-      // stage per Lloyd step; the riding payload is TrainCap-bounded:
-      // ≤65,536 × 512 B ≈ 32 MB through the map-side-combined shuffle
-      // at ANY corpus size). At the semdedup trained rung each Lloyd
-      // assignment is TrainCap × 2,048 cells = 1.3×10⁸ score rows;
-      // encoding stays full-corpus.
-      val sums = trainSample(e).join(cbDf)
-        .withColumn("ccos",
-          when($"norm" * $"cnorm" === 0, lit(Double.NaN)).otherwise(
-            round(vectorDot($"v", $"cv") / ($"norm" * $"cnorm"), 6)))
-        .withColumn("ccos", nanvl($"ccos", lit(1.0)))
-        .groupBy($"vec_id")
-        .agg(min(struct((lit(1.0) - $"ccos").as("d"), $"cid".as("c"),
-          $"v".as("v"))).as("m"))
-        .select($"m.c".as("cid"), $"m.v".as("v"))
-        .groupBy($"cid")
-        .agg(count(lit(1)).as("n"),
-          (0 until DIM).map(j =>
-            sum(floor(element_at($"v", j + 1) * PqScale).cast("long")).as(s"s$j")): _*)
-        .collect()
-      val byCid = sums.map(r => r.getLong(0) -> r).toMap
-      cb = cb.map { case (cid, prev, pnorm) =>
-        byCid.get(cid) match {
-          case Some(r) =>
-            val n = r.getLong(1).toDouble
-            val cvm = Array.tabulate(DIM)(j =>
-              (r.getLong(2 + j).toDouble / PqScale) / n)
-            // a mean that cancels to exactly zero keeps the previous
-            // (nonzero by induction) centroid — see the seed-guard note
-            val d = seqDot(cvm)
-            if (d == 0.0) (cid, prev, pnorm)
-            else (cid, cvm, math.sqrt(d))
-          case None => (cid, prev, pnorm) // empty cell keeps its centroid
-        }
-      }
-    }
-    broadcast(s.createDataset(cb.toSeq.map(t => (t._1, t._2.toSeq, t._3)))
-      .toDF("cid", "cv", "cnorm"))
-  }
+                                    cells: Int = IvfPqCells): DataFrame =
+    ivfCentroidsOf(e.sparkSession, trainRows(e), cells)
 
   /** IVF × PQ — the composed billion-vector serving architecture
     * (IVF-PQ, the FAISS/SPANN family): the [[topkPqAdc]] flat code scan
@@ -1616,24 +1430,10 @@ object Similarity extends QueryModule {
     // grows (see [[IvfPqSteps]])
     val n = e.count()
     val (cells, nprobe) = ivfPqParams(n)
-    // The two quantizer trainings are independent and each now runs
-    // driver-blocking Lloyd collects, so they train CONCURRENTLY
-    // (guide §2.6 — FIFO scheduling back-fills one chain's job tail
-    // with the other's). The training-cache scope is a thread-local
-    // DynamicVariable; re-install the caller's scope inside each future
-    // so a scoped index build (PqIndex) still owns its caches.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val scope = currentTrainingScope.value
-    val centF = Future {
-      currentTrainingScope.withValue(scope)(ivfPqCentroids(e, cells))
-    }
-    val cbkF = Future {
-      currentTrainingScope.withValue(scope)(pqCodebook(e, pqKsFor(n)))
-    }
-    val cent = Await.result(centF, Duration.Inf)
-    val cbk = Await.result(cbkF, Duration.Inf)
+    // both quantizers train on the driver from ONE collected sample
+    val rows = trainRows(e)
+    val cent = ivfCentroidsOf(e.sparkSession, rows, cells)
+    val cbk = pqCodebookOf(e.sparkSession, rows, pqKsFor(n))
     IvfPqRelations(cent, ivfPqPostings(e, cent, cbk), cbk, cells, nprobe,
       ivfPqShortlistFor(n), pqKsFor(n))
   }

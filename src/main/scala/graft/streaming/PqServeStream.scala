@@ -38,31 +38,23 @@ object PqServeStream {
     * once here, so serving triggers never pay it). */
   final case class PqIndex(vecs: DataFrame, cent: DataFrame,
                            postings: DataFrame, cbk: DataFrame,
-                           nprobe: Int, shortlist: Int,
-                           training: Similarity.TrainingScope) {
-    def unpersist(): Unit = {
-      vecs.unpersist(); postings.unpersist()
-      // training-time caches (xb slices, per-Lloyd-step codebooks) are
-      // persisted inside Similarity's training loops under THIS build's
-      // scope — drain only ours, so a concurrent job's in-flight build
-      // keeps its caches (ADVICE r10)
-      training.release()
-    }
+                           nprobe: Int, shortlist: Int) {
+    def unpersist(): Unit = { vecs.unpersist(); postings.unpersist() }
   }
 
   /** Build + persist the serving index over a raw `(vec_id, embedding)`
-    * corpus. Training (Lloyd refinement of both quantizers) runs here,
-    * once, inside its own cache scope — serving never retrains. */
+    * corpus. Training (Lloyd refinement of both quantizers, on the driver
+    * from one collected sample) runs here, once — serving never
+    * retrains, and training persists nothing. */
   def corpusIndex(corpus: DataFrame): PqIndex = {
     val e = SemDedupStream.prepVecs(corpus).persist()
-    val (idx, scope) =
-      Similarity.withTrainingScope(Similarity.ivfPqIndex(e))
+    val idx = Similarity.ivfPqIndex(e)
     // the ladder rungs ([[Similarity.ivfPqParams]] probe count and the
     // r19 [[Similarity.ivfPqShortlistFor]] rerank shortlist) travel with
     // the index: serving must probe and rerank at the rungs the index
     // was trained for
     PqIndex(e, idx.cent, idx.postings.persist(), idx.cbk,
-      idx.nprobe, idx.shortlist, scope)
+      idx.nprobe, idx.shortlist)
   }
 
   /** Answer one batch of `(vec_id, embedding)` query vectors from the

@@ -51,18 +51,11 @@ object SemDedupStream {
     * them) and batch assignment must use bit-identical centroids or the
     * batch-boundary-invariance contract breaks. */
   final case class SemIndex(assign: DataFrame, centroids: DataFrame,
-                            vecs: DataFrame,
-                            training: Similarity.TrainingScope) {
+                            vecs: DataFrame) {
     /** Release the index's persisted relations (assignment + prepped
-      * corpus vectors) AND the Lloyd-training caches behind trained
-      * centroids — they were persisted under this build's own scope
-      * (the [[PqServeStream.PqIndex]] convention, ADVICE r15: the old
-      * unpersist left them for the session-wide clearCache, so
-      * long-lived sessions rebuilding indexes accumulated cached
-      * relations). */
-    def unpersist(): Unit = {
-      assign.unpersist(); vecs.unpersist(); training.release()
-    }
+      * corpus vectors). Centroid training persists nothing: it runs on
+      * the driver from one collected sample. */
+    def unpersist(): Unit = { assign.unpersist(); vecs.unpersist() }
   }
 
   /** Build the corpus-at-rest index. The cell count rides the
@@ -74,18 +67,11 @@ object SemDedupStream {
     * where per-batch cost ∝ expected cell size and smaller cells win
     * strictly, so this ladder keeps cell size (and per-batch screen
     * cost, which joins each new vector to ONE cell's members) bounded as
-    * the at-rest corpus grows instead of drifting toward n/16. Training
-    * caches are collected into the build's own
-    * [[Similarity.TrainingScope]] and released by `SemIndex.unpersist()`
-    * (ADVICE r15) — no session-wide clearCache needed between rebuilds. */
+    * the at-rest corpus grows instead of drifting toward n/16. */
   def corpusIndex(corpus: DataFrame): SemIndex = {
     val e = prepVecs(corpus).persist()
-    // trained-rung centroid builds persist Lloyd-step relations; collect
-    // them into this build's own scope so unpersist() releases exactly
-    // this index's cached state (the PqServeStream.corpusIndex pattern)
-    val (cent, scope) =
-      Similarity.withTrainingScope(Similarity.semCentroidsAtRest(e, e.count()))
-    SemIndex(Similarity.cellAssignment(e, cent).persist(), cent, e, scope)
+    val cent = Similarity.semCentroidsAtRest(e, e.count())
+    SemIndex(Similarity.cellAssignment(e, cent).persist(), cent, e)
   }
 
   /** Screen one batch of new `(vec_id, embedding)` vectors against a

@@ -1,15 +1,22 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 import graft.functions.VectorDot.vectorDot
 import graft.operators.Similarity
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, sqrt}
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
-/** The driver-side Lloyd trainer ([[graft.operators.Lloyd]]) against the
-  * distributed trainers it replaces: bit-identical coarse centroids and
-  * PQ codebooks on the gate corpus and on seeded corpora that reach the
-  * zero-norm, empty-cell and zero-mean edges. */
+/** The driver-side coarse-quantizer training ([[Similarity.ivfPqCentroids]])
+  * against an independent Scala spherical Lloyd — the twin of
+  * `Round9OpsSpec.refinedCodebook`, which pins [[Similarity.pqCodebook]]
+  * — on the gate corpus and on seeded corpora that reach the zero-norm,
+  * empty-cell and zero-mean edges; and the Spark jobs an index build
+  * fires. */
 class QuantizerTrainingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -18,48 +25,78 @@ class QuantizerTrainingSpec extends AnyFunSuite {
     rows.toDF("vec_id", "v").withColumn("norm", sqrt(vectorDot(col("v"), col("v"))))
   }
 
+  /** Spherical Lloyd, written out: first-`cells` nonzero seeds, per step
+    * each vector joins the cell of least `1 − round(cos, 6)` (a zero
+    * norm scores cos 1.0; strict < keeps the lowest cid), and each
+    * nonempty cell moves to its exact `floor(x·2³⁰)` mean unless that
+    * mean is the zero vector. Returns (cid, cv, cnorm) by cid. */
+  private def sphericalLloyd(vecs: Seq[(Long, Array[Double], Double)],
+                             cells: Int): Seq[(Long, Array[Double], Double)] = {
+    val scale = Similarity.PqScale
+    def dot(a: Array[Double], b: Array[Double]) = {
+      var s = 0.0
+      for (i <- a.indices) s += a(i) * b(i)
+      s
+    }
+    var cent = vecs.filter { case (id, _, n) => id < cells && n > 0 }.sortBy(_._1)
+    for (_ <- 1 to Similarity.PqLloydIters) {
+      val sums = Array.fill(cent.size, 64)(0L)
+      val cnt = Array.fill(cent.size)(0L)
+      vecs.foreach { case (_, v, norm) =>
+        var best = -1
+        var bestD = Double.MaxValue
+        for (c <- cent.indices) {
+          val (_, cv, cnorm) = cent(c)
+          // Spark's ROUND: BigDecimal.valueOf (decimal string), HALF_UP
+          val ccos = if (norm * cnorm == 0) 1.0
+            else BigDecimal.valueOf(dot(v, cv) / (norm * cnorm))
+              .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+          if (1.0 - ccos < bestD) { bestD = 1.0 - ccos; best = c }
+        }
+        cnt(best) += 1
+        for (i <- 0 until 64) sums(best)(i) += math.floor(v(i) * scale).toLong
+      }
+      cent = cent.indices.map { c =>
+        val mean = Array.tabulate(64)(i => (sums(c)(i).toDouble / scale) / cnt(c))
+        if (cnt(c) == 0 || dot(mean, mean) == 0.0) cent(c)
+        else (cent(c)._1, mean, math.sqrt(dot(mean, mean)))
+      }
+    }
+    cent
+  }
+
   private def bits(xs: Seq[Double]): Seq[Long] = xs.map(java.lang.Double.doubleToRawLongBits)
 
-  /** (cid, cv bits, cnorm bits) rows of a centroid relation, by cid. */
-  private def rowsOf(df: DataFrame): Seq[(Long, Seq[Long], Seq[Long])] =
-    df.collect().toSeq.map { r =>
-      (r.getLong(0), bits(r.getSeq[Double](1)),
-        if (r.length > 2) bits(Seq(r.getDouble(2))) else Nil)
-    }.sortBy(_._1)
+  private def assertTrained(e: DataFrame, cells: Int): Unit = {
+    val vecs = e.select("vec_id", "v", "norm").collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
+    val expect = sphericalLloyd(vecs, cells)
+      .map { case (cid, cv, cnorm) => (cid, bits(cv.toSeq), bits(Seq(cnorm))) }
+    val got = Similarity.ivfPqCentroids(e, cells).collect().toSeq
+      .map(r => (r.getLong(0), bits(r.getSeq[Double](1)), bits(Seq(r.getDouble(2)))))
+      .sortBy(_._1)
+    assert(got.nonEmpty)
+    assert(got == expect, s"trained centroids differ from the reference at $cells cells")
+  }
 
-  private def sameTraining(e: DataFrame, cells: Int, ks: Int): Unit = {
-    val rows = Similarity.trainRows(e)
-    val ivfOld = rowsOf(Similarity.ivfPqCentroids(e, cells))
-    assert(ivfOld.nonEmpty)
-    assert(rowsOf(Similarity.ivfCentroidsOf(spark, rows, cells)) == ivfOld,
-      s"ivf centroids differ at $cells cells")
-    val pqOld = rowsOf(Similarity.pqCodebook(e, ks))
-    assert(pqOld.nonEmpty)
-    assert(rowsOf(Similarity.pqCodebookOf(spark, rows, ks)) == pqOld,
-      s"pq codebook differs at $ks entries")
+  test("coarse centroids equal the Scala spherical Lloyd on the gate corpus") {
+    val e = Similarity.vecs(spark, TestSpark.sf)
+    Seq(16, 64, 128).foreach(assertTrained(e, _))
     spark.catalog.clearCache()
   }
 
-  test("driver Lloyd equals the distributed trainers on the gate corpora") {
-    Seq(TestSpark.sf, "/root/testdata/sf0.01").foreach { dir =>
-      val e = Similarity.vecs(spark, dir)
-      sameTraining(e, cells = 64, ks = 16)
-      sameTraining(e, cells = 128, ks = 64)
-    }
-  }
-
-  test("driver Lloyd equals the distributed trainers on a seeded random corpus") {
+  test("coarse centroids equal the Scala spherical Lloyd on a seeded random corpus") {
     val rnd = new scala.util.Random(14)
     val base = (0 until 600).map { i =>
       i.toLong -> Array.fill(64)(math.round(rnd.nextGaussian() * 1e4) / 1e5)
     }.toMap
     // vec 0 is zero (a zero-norm vector and a filtered seed candidate);
-    // vec 5 repeats vec 3, so cell 5 ties to cell 3 and stays empty
+    // vec 5 repeats vec 3, so cell 5 ties to cell 3 and starts empty
     val rows = base.updated(0L, Array.fill(64)(0.0)).updated(5L, base(3L)).toSeq
-    sameTraining(prepared(rows), cells = 16, ks = 16)
+    assertTrained(prepared(rows), cells = 16)
   }
 
-  test("driver Lloyd equals the distributed trainers at the zero-norm, empty-cell and zero-mean edges") {
+  test("coarse centroids at the zero-norm, empty-cell and zero-mean edges") {
     def axis(i: Int, x: Double) = Array.tabulate(64)(j => if (j == i) x else 0.0)
     // vec 0: zero vector and zero-norm seed candidate. Seeds 1-4 share
     // one direction, so every vector ties every cell and joins cell 1:
@@ -69,10 +106,41 @@ class QuantizerTrainingSpec extends AnyFunSuite {
       3L -> axis(0, 3.0), 4L -> axis(0, 1.0), 5L -> axis(0, -7.0),
       6L -> axis(1, 1.0), 7L -> axis(1, -1.0))
     val e = prepared(rows)
-    sameTraining(e, cells = 5, ks = 8)
-    val cent = rowsOf(Similarity.ivfCentroidsOf(spark, Similarity.trainRows(e), 5))
-    assert(cent.map(_._1) == Seq(1L, 2L, 3L, 4L))
-    assert(cent.map(_._2) == (1 to 4).map(i => bits(rows(i)._2.toSeq)),
+    assertTrained(e, cells = 5)
+    val cent = Similarity.ivfPqCentroids(e, 5).collect()
+      .map(r => r.getLong(0) -> bits(r.getSeq[Double](1))).sortBy(_._1).toSeq
+    assert(cent == (1 to 4).map(i => rows(i)._1 -> bits(rows(i)._2.toSeq)),
       "vacuous: a cancelled or empty cell moved")
+  }
+
+  test("an IVF-PQ index build fires three jobs: the ladder count's two and one sample collect") {
+    val e = Similarity.vecs(spark, TestSpark.sf)
+    e.count()
+    // stage names of each job ("collect at Similarity.scala:N"), or the
+    // description of the marker job
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add(Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(j.stageInfos.map(_.name).mkString("|")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Similarity.ivfPqIndex(e)
+      // the listener bus delivers in order: once this job is seen, every
+      // job the build fired has been counted
+      spark.sparkContext.setJobDescription("marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      eventually(timeout(10.seconds)) { assert(jobs.contains("marker")) }
+      // under AQE the count is two jobs (its shuffle-map stage, then the
+      // result); both quantizers train from the one collect
+      val built = jobs.asScala.filter(_ != "marker").toSeq
+      assert(built.size == 3, built)
+      assert(built.count(_.startsWith("collect at Similarity.scala")) == 1, built)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.catalog.clearCache()
+    }
   }
 }

@@ -403,7 +403,7 @@ class SimilaritySpec extends AnyFunSuite with TestSpark.TempDirs {
         s"expected occupancy blew up at n=$n, bits=$bits") }
   }
 
-  /** ADVICE r15: training assignment rides [[Similarity.semAssign]],
+  /** ADVICE r15: training assignment scores as [[Similarity.semAssign]],
     * whose nanvl(ccos, 1.0) exists for zero-norm VECTORS — a zero-norm
     * CENTROID would score NaN→1.0 (d = 0) against every vector and
     * capture a whole Lloyd iteration. The guard makes such centroids
@@ -425,24 +425,22 @@ class SimilaritySpec extends AnyFunSuite with TestSpark.TempDirs {
     ) ++ (4 to 9).map(k => (k.toLong, near(k % 3, 0.05 * (k - 3))))
     val e = rows.toDF("vec_id", "v")
       .withColumn("norm", sqrt(vectorDot(col("v"), col("v"))))
-    try {
-      val cb = operators.Similarity.ivfPqCentroids(e, cells = 4).collect()
-      // the degenerate seed is filtered, every surviving centroid nonzero
-      assert(!cb.exists(_.getAs[Long]("cid") == 0L))
-      cb.foreach(r => assert(r.getAs[Double]("cnorm") > 0))
-      val assign = operators.Similarity
-        .semAssign(e, operators.Similarity.ivfPqCentroids(e, cells = 4))
-        .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cid")).toMap
-      // zero-norm VECTOR half of the contract: pinned to the lowest cid
-      assert(assign(0L) === cb.map(_.getAs[Long]("cid")).min)
-      // no capture: nonzero vectors spread over distinct cells
-      assert((assign - 0L).values.toSet.size >= 2)
-      // untrained first-n path rides the same guard (r16): the engines
-      // DISAGREE on a zero-norm centroid (engine d=0 wins, oracle's
-      // x/0→NULL sorts last and loses), so seeds filter it on both sides
-      val cf = operators.Similarity.centroidsOf(e, ncent = 4).collect()
-      assert(!cf.exists(_.getAs[Long]("cid") == 0L))
-      cf.foreach(r => assert(r.getAs[Double]("cnorm") > 0))
-    } finally operators.Similarity.releaseTrainingCaches()
+    val cb = operators.Similarity.ivfPqCentroids(e, cells = 4).collect()
+    // the degenerate seed is filtered, every surviving centroid nonzero
+    assert(!cb.exists(_.getAs[Long]("cid") == 0L))
+    cb.foreach(r => assert(r.getAs[Double]("cnorm") > 0))
+    val assign = operators.Similarity
+      .semAssign(e, operators.Similarity.ivfPqCentroids(e, cells = 4))
+      .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cid")).toMap
+    // zero-norm VECTOR half of the contract: pinned to the lowest cid
+    assert(assign(0L) === cb.map(_.getAs[Long]("cid")).min)
+    // no capture: nonzero vectors spread over distinct cells
+    assert((assign - 0L).values.toSet.size >= 2)
+    // untrained first-n path rides the same guard (r16): the engines
+    // DISAGREE on a zero-norm centroid (engine d=0 wins, oracle's
+    // x/0→NULL sorts last and loses), so seeds filter it on both sides
+    val cf = operators.Similarity.centroidsOf(e, ncent = 4).collect()
+    assert(!cf.exists(_.getAs[Long]("cid") == 0L))
+    cf.foreach(r => assert(r.getAs[Double]("cnorm") > 0))
   }
 }

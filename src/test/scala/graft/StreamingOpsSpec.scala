@@ -411,26 +411,25 @@ class StreamingOpsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  /** ADVICE r15: SemIndex.unpersist() released assign + vecs but not
-    * the Lloyd-training frames persisted behind TRAINED centroids, so
-    * long-lived sessions rebuilding indexes accumulated cached
-    * relations. The index now carries its build's TrainingScope (the
-    * PqIndex convention) and unpersist() drains it. Built here with the
+  /** ADVICE r15: SemIndex.unpersist() once left the Lloyd-training
+    * frames persisted behind TRAINED centroids, so long-lived sessions
+    * rebuilding indexes accumulated cached relations. Training now runs
+    * on the driver and persists nothing; this pins that the index's own
+    * unpersist() leaves no persistent RDD behind. Built with the
     * trained-path centroid builder forced (the gate corpus sits below
-    * the hand-over rung, where first-n seeds persist nothing), exactly
-    * the corpusIndex wiring. Compared as RDD ID SETS, not counts (the
-    * DedupSpec leak-spec lesson: ContextCleaner races a count). */
+    * the hand-over rung), exactly the corpusIndex wiring. Compared as
+    * RDD ID SETS, not counts (the DedupSpec leak-spec lesson:
+    * ContextCleaner races a count). */
   test("SemIndex.unpersist releases the build's training caches (ADVICE r15)") {
     import graft.operators.Similarity
     spark.catalog.clearCache()
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val emb = Tables.embeddings(spark, TestSpark.sf).select("vec_id", "embedding")
     val e = graft.streaming.SemDedupStream.prepVecs(emb).persist()
-    val (cent, scope) =
-      Similarity.withTrainingScope(Similarity.ivfPqCentroids(e, cells = 4))
+    val cent = Similarity.ivfPqCentroids(e, cells = 4)
     val idx = graft.streaming.SemDedupStream.SemIndex(
-      Similarity.cellAssignment(e, cent).persist(), cent, e, scope)
-    idx.assign.count() // materialize the index and its training caches
+      Similarity.cellAssignment(e, cent).persist(), cent, e)
+    idx.assign.count() // materialize the index
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
       "vacuous: the trained build persisted nothing")
     idx.unpersist()
