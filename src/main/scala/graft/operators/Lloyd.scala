@@ -6,13 +6,12 @@ import scala.concurrent.duration.Duration
 
 /** The quantizer training sample collected to the driver: row `i` is
   * `ids(i)`, its vector `v(i)` and the relation's own `norm(i)` (NaN when
-  * the frame carries no norm). A null vector is a null `v(i)`; a null
-  * element is stored as 0.0 and flagged in `nulls(i)` (null when the row
-  * has none), so the dot and the sums skip it as
-  * [[graft.functions.VectorDot]] and Spark's `sum` do. */
+  * the frame carries no norm). A null vector is a null `v(i)`. A null
+  * element is stored as 0.0, which adds nothing to the sums or to a dot
+  * against a finite centroid — what [[graft.functions.VectorDot]]'s and
+  * Spark's `sum`'s null skipping give. */
 private[graft] final class TrainRows(val ids: Array[Long],
-    val v: Array[Array[Double]], val nulls: Array[Array[Boolean]],
-    val norm: Array[Double])
+    val v: Array[Array[Double]], val norm: Array[Double])
 
 /** Deterministic Lloyd k-means over a [[TrainRows]] sample, in plain
   * arrays on the driver — the training behind both IVF-PQ quantizers
@@ -35,14 +34,10 @@ private[graft] object Lloyd {
     else java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** `x[off, off + dim) · c`, skipping null elements of `x`. */
-  private def dot(x: Array[Double], m: Array[Boolean], off: Int,
-                  c: Array[Double], dim: Int): Double = {
+  /** `x[off, off + dim) · c`. */
+  private def dot(x: Array[Double], off: Int, c: Array[Double], dim: Int): Double = {
     var acc = 0.0; var j = 0
-    while (j < dim) {
-      if (m == null || !m(off + j)) acc += x(off + j) * c(j)
-      j += 1
-    }
+    while (j < dim) { acc += x(off + j) * c(j); j += 1 }
     acc
   }
 
@@ -62,8 +57,8 @@ private[graft] object Lloyd {
     val n = rows.v.length
     val chunk = math.max(1, (n + Runtime.getRuntime.availableProcessors - 1) /
       Runtime.getRuntime.availableProcessors)
-    for (_ <- 1 to Similarity.PqLloydIters) {
-      val cc = cent.map(c => dot(c, null, 0, c, dim))
+    for (_ <- 1 to Similarity.PqLloydIters if k > 0) {
+      val cc = cent.map(c => dot(c, 0, c, dim))
       // The score is a monotone function of `w`, so only the centroids
       // whose `w` lies within a rounding step of the row's minimum can
       // reach the minimum score; only those are rounded and compared.
@@ -82,13 +77,13 @@ private[graft] object Lloyd {
         val ws = new Array[Double](k)
         var i = from
         while (i < until) {
-          val x = rows.v(i); val m = rows.nulls(i)
+          val x = rows.v(i)
           // a null vector scores null on every centroid, and Spark's
           // struct ordering puts null first: it joins the lowest cid
           var best = 0
           if (x != null) {
             var c = 0
-            if (m == null) while (c + 4 <= k) {
+            while (c + 4 <= k) {
               // four independent left-to-right sums per pass over x
               val c0 = cent(c); val c1 = cent(c + 1); val c2 = cent(c + 2); val c3 = cent(c + 3)
               var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0; var j = 0
@@ -101,7 +96,7 @@ private[graft] object Lloyd {
               ws(c + 2) = w(i, c + 2, a2); ws(c + 3) = w(i, c + 3, a3)
               c += 4
             }
-            while (c < k) { ws(c) = w(i, c, dot(x, m, off, cent(c), dim)); c += 1 }
+            while (c < k) { ws(c) = w(i, c, dot(x, off, cent(c), dim)); c += 1 }
             var wmin = Double.PositiveInfinity; var any = false
             c = 0
             while (c < k) { if (ws(c) <= wmin) { wmin = ws(c); any = true }; c += 1 }
@@ -121,8 +116,7 @@ private[graft] object Lloyd {
             }
             var j = 0
             while (j < dim) {
-              if (m == null || !m(off + j))
-                sums(best * dim + j) += math.floor(x(off + j) * PqScale).toLong
+              sums(best * dim + j) += math.floor(x(off + j) * PqScale).toLong
               j += 1
             }
           }
@@ -139,7 +133,7 @@ private[graft] object Lloyd {
         if (cn > 0) {
           val mean = Array.tabulate(dim)(j =>
             (parts.map(_._2(c * dim + j)).sum.toDouble / PqScale) / cn.toDouble)
-          val d = dot(mean, null, 0, mean, dim)
+          val d = dot(mean, 0, mean, dim)
           if (!spherical) cent(c) = mean
           else if (d != 0.0) { cent(c) = mean; cnorm(c) = math.sqrt(d) }
         }

@@ -944,7 +944,6 @@ object Similarity extends QueryModule {
     * FAISS convention), so the scale never binds. */
   private[graft] val PqScale = (1L << 30).toDouble
 
-  /** [[trainSample]] collected to the driver, once per index build. */
   /** [[trainSample]] collected to the driver: the input of both
     * quantizer trainings, collected once per index build. */
   private def trainRows(e: DataFrame): TrainRows = {
@@ -952,15 +951,9 @@ object Similarity extends QueryModule {
     val rows = trainSample(e)
       .select(Seq(col("vec_id"), col("v")) ++ (if (withNorm) Seq(col("norm")) else Nil): _*)
       .collect()
-    def elems(r: org.apache.spark.sql.Row) =
-      if (r.isNullAt(1)) null else r.getSeq[Any](1)
     new TrainRows(rows.map(_.getLong(0)),
-      rows.map(r => Option(elems(r)).map(_.map {
-        case d: Double => d
-        case _ => 0.0
-      }.toArray).orNull),
-      rows.map(r => Option(elems(r)).filter(_.contains(null))
-        .map(_.map(_ == null).toArray).orNull),
+      rows.map(r => if (r.isNullAt(1)) null
+        else r.getSeq[Any](1).map { case d: Double => d; case _ => 0.0 }.toArray),
       rows.map(r => if (withNorm && !r.isNullAt(2)) r.getDouble(2) else Double.NaN))
   }
 

@@ -113,6 +113,33 @@ class QuantizerTrainingSpec extends AnyFunSuite {
       "vacuous: a cancelled or empty cell moved")
   }
 
+  test("null elements and a null vector train as zeros") {
+    val rnd = new scala.util.Random(15)
+    val vecs = (0 until 300).map { i =>
+      i.toLong -> Array.fill(64)(math.round(rnd.nextGaussian() * 1e4) / 1e5)
+    }
+    // every 5th element of vecs 20-59 is null, and vec 70 is null: both
+    // add nothing, and a null vector joins the lowest cell as a
+    // zero-norm one does
+    def isNull(i: Long, j: Int) = i >= 20 && i < 60 && j % 5 == 0
+    val s = spark; import s.implicits._
+    val withNulls = vecs.map { case (i, v) =>
+      (i, if (i == 70) None else Some(v.indices.map(j => if (isNull(i, j)) None else Some(v(j)))))
+    }.toDF("vec_id", "v").withColumn("norm", sqrt(vectorDot(col("v"), col("v"))))
+    val zeros = prepared(vecs.map { case (i, v) =>
+      i -> (if (i == 70) Array.fill(64)(0.0)
+            else v.indices.map(j => if (isNull(i, j)) 0.0 else v(j)).toArray)
+    })
+    def trained(df: DataFrame) = df.collect().toSeq
+      .map(r => (r.getLong(0), bits(r.getSeq[Double](1)))).sortBy(_._1)
+    assert(trained(Similarity.ivfPqCentroids(withNulls, 16)) ==
+      trained(Similarity.ivfPqCentroids(zeros, 16)))
+    // a null vector takes PQ code 0 where a zero vector takes the entry
+    // of least norm, so the PQ comparison leaves vec 70 out
+    assert(trained(Similarity.pqCodebook(withNulls.where(col("vec_id") =!= 70), 16)) ==
+      trained(Similarity.pqCodebook(zeros.where(col("vec_id") =!= 70), 16)))
+  }
+
   test("an IVF-PQ index build fires three jobs: the ladder count's two and one sample collect") {
     val e = Similarity.vecs(spark, TestSpark.sf)
     e.count()
