@@ -760,8 +760,12 @@ object Dedup extends QueryModule {
       .select($"doc_id", explode($"shingles").as("sh"))
       .join(bench, "sh")
       .groupBy($"doc_id")
-      .agg(countDistinct($"sh").as("n_hit_shingles"),
-           countDistinct($"bench_id").as("n_bench_docs"))
+      // set sizes, not countDistinct: two distinct aggregates go through
+      // RewriteDistinctAggregates, whose Expand orders its projections by
+      // an expression-id hash, so the plan depended on what the JVM had
+      // composed before this query
+      .agg(size(collect_set($"sh")).cast("long").as("n_hit_shingles"),
+           size(collect_set($"bench_id")).cast("long").as("n_bench_docs"))
       .orderBy($"doc_id")
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.{Expand, GlobalLimit, LogicalPlan, Window}
 import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -375,5 +376,31 @@ class PlanSpec extends AnyFunSuite {
     assert(readSchema.contains("l_orderkey") && readSchema.contains("l_shipdate"),
       readSchema)
     assert(f.contains("HashAggregate"), f) // map-side combine of block stats
+  }
+
+  test("decontaminate counts its distinct sets without an Expand") {
+    val plan = SparkEntry.queries("dedup_decontaminate")(spark, TestSpark.sf)
+      .queryExecution.optimizedPlan
+    assert(plan.collect { case x: Expand => x }.isEmpty, plan.treeString)
+  }
+
+  test("every unpartitioned window reads only limit-bounded input") {
+    // each path below the window passes through a GlobalLimit, so the
+    // single-partition window holds a bounded row count at any scale
+    def bounded(p: LogicalPlan): Boolean = p match {
+      case _: GlobalLimit => true
+      case _ => p.children.nonEmpty && p.children.forall(bounded)
+    }
+    var windows = 0
+    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, TestSpark.sf).queryExecution.optimizedPlan
+      spark.catalog.clearCache()
+      plan.collectWithSubqueries { case w: Window if w.partitionSpec.isEmpty => w }
+        .foreach { w =>
+          windows += 1
+          assert(bounded(w.child), s"$name: unbounded input under\n${w.treeString}")
+        }
+    }
+    assert(windows > 0, "vacuous: no unpartitioned window in any plan")
   }
 }
