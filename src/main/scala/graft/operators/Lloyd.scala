@@ -55,8 +55,8 @@ private[graft] object Lloyd {
     val cent = seeds.map(i => java.util.Arrays.copyOfRange(rows.v(i), off, off + dim))
     val cnorm = seeds.map(rows.norm(_))
     val n = rows.v.length
-    val chunk = math.max(1, (n + Runtime.getRuntime.availableProcessors - 1) /
-      Runtime.getRuntime.availableProcessors)
+    val cores = Runtime.getRuntime.availableProcessors
+    val chunk = math.max(1, (n + cores - 1) / cores)
     for (_ <- 1 to Similarity.PqLloydIters if k > 0) {
       val cc = cent.map(c => dot(c, 0, c, dim))
       // The score is a monotone function of `w`, so only the centroids
