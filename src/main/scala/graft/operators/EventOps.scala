@@ -553,14 +553,14 @@ object EventOps extends QueryModule {
     Similarity.planeIntMatrix(ProfPoolSize, 24)
   private val profPlanes: Array[Array[Double]] = profPlaneInts.map(_.map(_ / 1000.0))
 
-  /** E2LSH candidate pairs over a [[profileVecs]] relation — split out so
-    * the scale bench can measure candidate volume (selectivity) directly,
-    * independent of the exact-distance verify. Parameterized so the
-    * calibration sweep can time alternatives; registered queries pass the
-    * [[profParams]] ladder rung for the corpus user count. Planes come
-    * from the prefix-stable shared pool whenever the rung fits in it. */
-  private def tsBuckets(vecs: DataFrame, pt: Int, pk: Int, pw: Double,
-                        cap: Option[Long], withVec: Boolean): DataFrame = {
+  /** E2LSH buckets `(user_id[, vec], tbl, qs)` over a [[profileVecs]]
+    * relation: `pt` tables of `pk` projections of width `pw`, capped per
+    * bucket. Two users sharing a `(tbl, qs)` bucket are a candidate pair.
+    * Registered queries pass the [[profParams]] ladder rung for the
+    * corpus user count. Planes come from the prefix-stable shared pool
+    * whenever the rung fits in it. */
+  private[graft] def tsBuckets(vecs: DataFrame, pt: Int, pk: Int, pw: Double,
+                               cap: Option[Long], withVec: Boolean): DataFrame = {
     val planes =
       if (pt * pk <= profPlanes.length) profPlanes
       else Similarity.planeIntMatrix(pt * pk, 24).map(_.map(_ / 1000.0))
@@ -589,19 +589,6 @@ object EventOps extends QueryModule {
     // the deterministic sample pairs up.
     Similarity.capPostings(buckets0, cap,
       idCol = "user_id", keyCols = Seq("tbl", "qs"))
-  }
-
-  private[graft] def tsCandidates(vecs: DataFrame,
-                                  pt: Int = ProfTables,
-                                  pk: Int = ProfProj,
-                                  pw: Double = ProfWidth,
-                                  cap: Option[Long] = None): DataFrame = {
-    val buckets = tsBuckets(vecs, pt, pk, pw, cap, withVec = false)
-    buckets.as("ba")
-      .join(buckets.as("bb"), Seq("tbl", "qs"), "inner")
-      .where(col("ba.user_id") < col("bb.user_id"))
-      .select(col("ba.user_id").as("user_a"), col("bb.user_id").as("user_b"))
-      .distinct()
   }
 
   /** Fused candidate-and-verify stream: the exact distance is computed

@@ -173,9 +173,10 @@ case class AsofJoinExec(
 /** DataFrame-level entry point. */
 object Asof {
 
-  /** Install the planner strategy on a session (idempotent). Also wired
-    * through [[GraftExtensions]] for `spark.sql.extensions` users. */
-  def ensureStrategy(spark: SparkSession): Unit = {
+  /** Install the planner strategy on a session (idempotent). The one
+    * place graft touches a session's planner: every session that joins
+    * through [[join]] gets it there, whoever built the session. */
+  private def ensureStrategy(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraStrategies
     if (!cur.contains(AsofJoinStrategy))
       spark.experimental.extraStrategies = cur :+ AsofJoinStrategy

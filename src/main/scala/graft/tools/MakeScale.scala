@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Synthesize a K× scale-up of a testdata dir (default: sf0.1 × 10 ≈ sf1)
@@ -24,6 +24,10 @@ import org.apache.spark.sql.functions._
   *     output grows K×, not K²× (same construction as the round-4
   *     dedup scale-up, BASELINE.md, which pinned the linearity), while 2/3 of
   *     tokens keep their identity for stopword/char-distribution ops;
+  *   - `embeddings.vec_id` is numbered `r * n + vec_id` over the base
+  *     table's `n` rows, which must hold ids exactly `0..n-1`: the ids
+  *     stay dense from 0, so quantizer training's `vec_id < TrainCap`
+  *     sample and its seeds draw from every replica, not replica 0 only;
   *   - `embeddings.embedding` is rotated by `(r * 7) mod dim` positions:
   *     a coordinate permutation is orthogonal, so WITHIN a replica all
   *     norms/dots/neighborhoods are identical to the original, while
@@ -51,13 +55,19 @@ object MakeScale {
     val tableFilter = args.lift(3).map(_.split(",").toSet)
     val spark = graft.Sessions.create("MakeScale")
     spark.sparkContext.setLogLevel("WARN")
+    replicate(spark, src, out, k, tableFilter)
+    spark.stop()
+  }
 
+  /** Write `k` replicas of each table of `src` (or of the `tableFilter`
+    * subset) as `out/<table>.parquet`. */
+  def replicate(spark: SparkSession, src: String, out: String, k: Int,
+                tableFilter: Option[Set[String]]): Unit = {
     def rep(base: DataFrame)(f: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until k).map(r => f(base, r)).reduce(_ unionByName _)
 
-    def offset(c: String, r: Int): Column2 = col(c) + lit(r * Off)
-    type Column2 = org.apache.spark.sql.Column
-    def tag(c: String, r: Int): Column2 =
+    def offset(c: String, r: Int): Column = col(c) + lit(r * Off)
+    def tag(c: String, r: Int): Column =
       if (r == 0) col(c) else concat(col(c), lit(s"~$r"))
 
     def write(name: String, df: => DataFrame): Unit =
@@ -112,11 +122,18 @@ object MakeScale {
     // remove the precondition and the family bound outright, and
     // distinctness is asserted at construction instead of argued.
     ScaleVecs.assertDistinct(k)
-    write("embeddings", rep(Tables.embeddings(spark, src)) { (d, r) =>
-      val emb = ScaleVecs.replicaTransform(col("embedding"), size(col("embedding")), r)
-      d.withColumn("vec_id", offset("vec_id", r)).withColumn("embedding", emb)
+    write("embeddings", {
+      val base = Tables.embeddings(spark, src)
+      val ids = base.agg(count(lit(1)), countDistinct(col("vec_id")),
+        min(col("vec_id")), max(col("vec_id"))).head()
+      val n = ids.getLong(0)
+      require(n > 0 && ids.getLong(1) == n && ids.getLong(2) == 0L && ids.getLong(3) == n - 1,
+        s"$src embeddings: vec_id must be exactly 0..${n - 1}, got $n rows, " +
+          s"${ids.get(1)} distinct ids in [${ids.get(2)}, ${ids.get(3)}]")
+      rep(base) { (d, r) =>
+        val emb = ScaleVecs.replicaTransform(col("embedding"), size(col("embedding")), r)
+        d.withColumn("vec_id", col("vec_id") + lit(r * n)).withColumn("embedding", emb)
+      }
     })
-
-    spark.stop()
   }
 }

@@ -2,7 +2,8 @@ package graft
 
 import java.sql.Timestamp
 import graft.operators.EventOps
-import graft.plans.{Asof, AsofJoinExec}
+import graft.plans.{Asof, AsofJoinExec, AsofJoinStrategy}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
@@ -12,6 +13,13 @@ class AsofJoinSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  // AQE wraps subtrees in QueryStageExec LEAF nodes — flatten through them
+  private def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+    case q: QueryStageExec        => p +: flatten(q.plan)
+    case other                    => other +: other.children.flatMap(flatten)
+  }
 
   test("handcrafted fixture: latest reference at-or-before each probe, nulls when none") {
     import spark.implicits._
@@ -78,6 +86,36 @@ class AsofJoinSpec extends AnyFunSuite {
     assert(got === expected)
   }
 
+  test("Asof.join installs its strategy on any session, once") {
+    // a new session has its own, empty planner lists — like a session
+    // that Sessions.create did not build
+    val fresh = spark.newSession()
+    assert(fresh.experimental.extraStrategies.isEmpty)
+    def joined(s: SparkSession) = {
+      import s.implicits._
+      val trades = Seq(
+        (1L, ts("2024-01-01 10:00:00"), "t1"),
+        (1L, ts("2024-01-01 10:05:00"), "t2"),
+        (2L, ts("2024-01-01 09:00:00"), "t3")
+      ).toDF("k", "t", "trade")
+      val quotes = Seq(
+        (1L, ts("2024-01-01 09:59:00"), 101.0),
+        (1L, ts("2024-01-01 10:05:00"), 102.0),
+        (2L, ts("2024-01-01 09:30:00"), 201.0)
+      ).toDF("qk", "qt", "price")
+      Asof.join(trades, quotes, Seq("k"), Seq("qk"), "t", "qt")
+    }
+    def rows(s: SparkSession) =
+      joined(s).select("trade", "price").collect().map(_.toString).sorted.toSeq
+    val first = joined(fresh)
+    first.collect()
+    assert(flatten(first.queryExecution.executedPlan).exists(_.isInstanceOf[AsofJoinExec]),
+      s"no AsofJoinExec in:\n${first.queryExecution.executedPlan}")
+    val freshRows = rows(fresh) // the second join
+    assert(fresh.experimental.extraStrategies.count(_ == AsofJoinStrategy) === 1)
+    assert(freshRows === rows(spark))
+  }
+
   test("plans as AsofJoinExec (no window machinery) with one exchange per side") {
     val ev = Tables.events(spark, TestSpark.sf)
     val p = ev.where(col("event_type") === "purchase")
@@ -86,12 +124,6 @@ class AsofJoinSpec extends AnyFunSuite {
       .select(col("user_id").as("cu"), col("ts").as("ct"))
     val df = Asof.join(p, c, Seq("user_id"), Seq("cu"), "pt", "ct")
     df.collect() // finalize any adaptive plan
-    // AQE wraps subtrees in QueryStageExec LEAF nodes — flatten through them
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case q: QueryStageExec        => p +: flatten(q.plan)
-      case other                    => other +: other.children.flatMap(flatten)
-    }
     val nodes = flatten(df.queryExecution.executedPlan)
     assert(nodes.exists(_.isInstanceOf[AsofJoinExec]),
       s"no AsofJoinExec in:\n${df.queryExecution.executedPlan}")
@@ -194,11 +226,6 @@ class AsofJoinSpec extends AnyFunSuite {
     ).toDF("qk", "qt", "price")
     val df = Asof.join(trades, quotes, Seq("k"), Seq("qk"), "t", "qt")
     df.collect()
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case q: QueryStageExec        => p +: flatten(q.plan)
-      case other                    => other +: other.children.flatMap(flatten)
-    }
     val exec = flatten(df.queryExecution.executedPlan)
       .collectFirst { case a: AsofJoinExec => a }
       .getOrElse(fail("no AsofJoinExec in plan"))

@@ -108,7 +108,7 @@ class CodegenBudgetSpec extends AnyFunSuite {
       .prepended((18, 5)) // base rung
     rungs.foreach { case (pt, pk) =>
       val sz = maxWholeStageMethodBytes(
-        EventOps.tsCandidates(profiles, pt, pk, cap = Some(400L)))
+        EventOps.tsBuckets(profiles, pt, pk, EventOps.ProfWidth, Some(400L), withVec = false))
       assert(sz < HotSpotJitLimit,
         s"E2LSH rung (pt=$pt,pk=$pk): max whole-stage method $sz bytes " +
           s"≥ HotSpot JIT limit $HotSpotJitLimit — this rung would run interpreted")

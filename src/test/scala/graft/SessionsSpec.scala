@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every graft entry point gets its session from [[Sessions.create]]. */
 class SessionsSpec extends AnyFunSuite {
 
-  test("Sessions.scala holds the only SparkSession builder under src/") {
-    val builder = """SparkSession\s*\.\s*builder""".r
+  /** `file:line` of every non-comment line under `src/` that `pattern`
+    * matches. */
+  private def codeSites(pattern: scala.util.matching.Regex): Seq[String] = {
     val files = Files.walk(Paths.get("src")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 50, s"src/ not found from ${Paths.get("").toAbsolutePath}")
@@ -16,13 +17,31 @@ class SessionsSpec extends AnyFunSuite {
       val t = line.trim
       t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
     }
-    val sites = files.flatMap { f: Path =>
+    files.flatMap { f: Path =>
       Files.readAllLines(f).asScala.zipWithIndex.collect {
-        case (line, i) if !isComment(line) && builder.findFirstIn(line).isDefined =>
+        case (line, i) if !isComment(line) && pattern.findFirstIn(line).isDefined =>
           s"$f:${i + 1}"
       }
     }
+  }
+
+  test("Sessions.scala holds the only SparkSession builder under src/") {
+    val sites = codeSites("""SparkSession\s*\.\s*builder""".r)
     assert(sites.size == 1 && sites.head.startsWith("src/main/scala/graft/Sessions.scala:"),
+      sites.mkString("\n"))
+  }
+
+  test("Asof.join holds the only planner, optimizer and function hook under src/main") {
+    // Asof.join installs AsofJoinStrategy per session, whoever built it;
+    // a second install path (session extensions, hand-edited planner
+    // lists, registered SQL functions) is what this keeps out
+    val hooks = Seq("extraStrategies", "extraOptimizations", "injectOptimizerRule",
+      "injectPlannerStrategy", "injectFunction", "spark.sql.extensions",
+      "createOrReplaceTempFunction")
+    val sites = codeSites(hooks.map(java.util.regex.Pattern.quote).mkString("|").r)
+      .filter(_.startsWith("src/main/"))
+    assert(sites.nonEmpty, "Asof.join's install no longer found")
+    assert(sites.forall(_.startsWith("src/main/scala/graft/plans/AsofJoin.scala:")),
       sites.mkString("\n"))
   }
 
